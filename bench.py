@@ -1,8 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "oracle_secs": {name: sec, ...},
-"sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default all
+cores) and prints ONE JSON line: {"metric": ..., "value": total_sec,
+"unit": "sec", "queries": {name: sec, ...}, "oracle_secs": {name: sec,
+...}, "sf": ...}.
 
 Each query is forced end-to-end with the noop sink (full materialization,
 no driver collect).  A warmup run of the flagship amortizes JVM/codegen
@@ -268,7 +268,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # Spill-aware partition sizing (SURVEY §6): shuffle partitions
     # scale with the input, floored at 8 and capped at the core count —
     # a fixed 32 on a ~17 MB sf0.1 input over-partitions every

@@ -1045,22 +1045,11 @@ def test_unigram_nll_single_scalar_broadcast(spark, sf_dir):
 
 
 def test_registry_hygiene_window_and_oracles():
-    """Driver-window pins must reference real keys (a typo silently
-    drops the pin), carry no duplicates, and every registered query
-    must have an oracle unless it is in the documented rows-only
-    allowlist (approx sketches / LSH — each anchored by an exact
-    driver-green sibling)."""
-    from marketstore_spark.queries import (
-        ORACLE_SQL,
-        SPARK_QUERIES,
-        _BACK,
-        _FRONT,
-    )
+    """Every registered query must have an oracle unless it is in the
+    documented rows-only allowlist (approx sketches / LSH — each
+    anchored by an exact driver-green sibling)."""
+    from marketstore_spark.queries import ORACLE_SQL, SPARK_QUERIES
 
-    pins = _FRONT + _BACK
-    missing = [k for k in pins if k not in SPARK_QUERIES]
-    assert not missing, f"pinned but unregistered: {missing}"
-    assert len(pins) == len(set(pins)), "duplicate pins"
     no_oracle = set(SPARK_QUERIES) - set(ORACLE_SQL)
     assert no_oracle == {
         "ann_ivf",
@@ -1151,12 +1140,15 @@ def test_registry_evidence_staleness_bound():
     """Driver-evidence freshness insurance (VERDICT r09 item 8): every
     registered key must either have driver correctness evidence from
     within the last 3 completed rounds or sit inside the upcoming
-    50-key driver window (the _FRONT rotation).  Goes red when a
-    backlog like round 9's 38 r5-stale keys accumulates, green once
-    the rotation fronts them."""
+    50-key driver window (the head of ``__spark_entry__.queries()``).
+    Goes red when a backlog like round 9's 38 r5-stale keys
+    accumulates beyond what one window can refresh.  An evidence file
+    that does not parse fails the test."""
     import glob
     import json
     import os
+
+    import __spark_entry__
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     files = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
@@ -1165,16 +1157,14 @@ def test_registry_evidence_staleness_bound():
     newest: dict[str, int] = {}
     for f in files:
         rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        try:
-            keys = json.load(open(f))
-        except ValueError:
-            continue
+        with open(f) as fh:
+            keys = json.load(fh)
         for k in keys:
             newest[k] = max(newest.get(k, 0), rnd)
     current = max(
         int(f.rsplit("_r", 1)[1].split(".")[0]) for f in files
     )
-    window = set(list(SPARK_QUERIES)[:50])
+    window = set(list(__spark_entry__.queries())[:50])
     stale = sorted(
         k
         for k in SPARK_QUERIES
@@ -1182,9 +1172,32 @@ def test_registry_evidence_staleness_bound():
     )
     assert not stale, (
         f"keys with driver evidence older than r{current - 3} and not "
-        f"fronted in the next driver window: {stale} — rotate them into "
-        f"queries._FRONT"
+        f"inside the next driver window: {stale}"
     )
+
+
+def test_evidence_order(tmp_path):
+    """The driver order derived from CORRECTNESS_r*.json: never-checked
+    keys first, then oldest newest-evidence first, registration order
+    on ties and when no evidence file exists; a file that does not
+    parse raises."""
+    import json
+
+    from __spark_entry__ import evidence_order
+
+    keys = ["a", "b", "c", "d", "e", "f"]
+    assert evidence_order(keys, str(tmp_path)) == keys
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({k: {} for k in ("a", "b", "c", "d")})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"a": {}, "c": {}}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps({"b": {}}))
+    # e, f unchecked; d newest r1; a, c newest r2 (tie); b newest r10
+    # (r10 sorts numerically after r02)
+    assert evidence_order(keys, str(tmp_path)) == ["e", "f", "d", "a", "c", "b"]
+    (tmp_path / "CORRECTNESS_r11.json").write_text('{"a": ')
+    with pytest.raises(ValueError):
+        evidence_order(keys, str(tmp_path))
 
 
 def test_liquidity_panel_one_scan_two_exchanges(spark, sf_dir):

@@ -4,7 +4,8 @@ Usage:
     python tools/plan_dump.py SUFFIX [name ...]
 
 Writes plans/$PLAN_ROUND (default r14)/<query>_<SUFFIX>.txt for each named query (default: every
-bench.HEADLINE key).  Also prints a one-line plan-shape summary per query
+bench.HEADLINE key).  The dumps are regenerated on demand, never committed
+(/plans/ is git-ignored).  Also prints a one-line plan-shape summary per query
 (Exchange / Join strategy / Python-eval node counts) so regressions in plan
 shape are greppable without opening each file.
 """

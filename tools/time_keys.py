@@ -3,7 +3,7 @@
 Usage: python tools/time_keys.py [--sf DIR] [--n 5] [--tag LABEL] key ...
 
 Times each key with the noop sink in one session (bench methodology:
-local[32], shuffle_partitions=8 by default, plan built fresh per rep so
+local[*], shuffle_partitions=8 by default, plan built fresh per rep so
 the number includes neither Spark startup nor result transfer).  Prints
 one line per key: tag key min median all-reps.
 """
@@ -26,7 +26,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--n", type=int, default=5)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "*"))
     ap.add_argument("--sp", type=int, default=8)
     ap.add_argument("--tag", default="run")
     ap.add_argument("keys", nargs="+")
