@@ -28,9 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from marketstore_spark.catalog import Catalog
-from marketstore_spark.operators.ca import CA_BUCKET
 from marketstore_spark.operators import slice as slice_ops
-from marketstore_spark.plans.query import parse_function_call, QueryParams, REGISTRY
+from marketstore_spark.plans.query import QueryParams, apply_functions
 from marketstore_spark.plans.sqlfront import MarketSQL
 
 
@@ -136,14 +135,13 @@ class Client:
                         .orderBy(*[c.asc() for c in order])
                     )
             df = slice_ops.project_columns(df, params.columns)
-            qp = QueryParams(ts_col=self.ts_col, symbol_col="__symbol")
-            if any(c.lstrip().lower().startswith("adjust") for c in params.functions):
-                # the adjust UDA reads the store's CA bucket, exactly
-                # like the reference's caloader pulls from the catalog
-                qp.ca_df = self.catalog.read(CA_BUCKET)
-            for call in params.functions:
-                name, args = parse_function_call(call)
-                df = REGISTRY[name](df.withColumn("__symbol", F.lit(key.split("/")[0])), qp, args)
+            # one bucket, one symbol; the catalog gives adjust() its CA
+            # bucket, like the reference's caloader
+            qp = QueryParams(
+                symbols=[key.split("/")[0]], symbol_col=None,
+                ts_col=self.ts_col, functions=params.functions,
+            )
+            df = apply_functions(df, qp, self.catalog)
             if params.limit is None and self.ts_col in df.columns:
                 # the reference's storage is time-indexed, so Query
                 # always returns Epoch order (executor/reader.go); a

@@ -636,6 +636,9 @@ def _sample_ranges(data: bytes, stbl: dict) -> list[tuple[int, int]]:
     s, e = stbl[b"stsz"]
     uniform, n = struct.unpack_from(">II", data, s + 4)
     if uniform:
+        # a corrupt count would otherwise size a list of up to 2³² entries
+        if uniform * n > len(data):
+            raise ValueError("stsz samples overrun the file")
         sizes = [uniform] * n
     else:
         if s + 12 + 4 * n > e:

@@ -12,12 +12,13 @@ the accepted statement shapes).
 Spark design: this is a thin *rewriter*, not a parser — Spark SQL
 already speaks a superset of the grammar, so the only marketstore-isms
 to translate are (a) backtick TBK table names, which become temp views
-registered from the catalog, and (b) the candler UDAs, which Spark
-lacks as SQL functions and we route to the candler operators
-(single-shuffle groupBy plans, operators/candler.py).  Scalar UDAs
-(min/max/avg/count) are native SQL aggregates and pass through to
-Catalyst untouched — no reason to reimplement what the optimizer
-already vectorizes.
+registered from the catalog, and (b) a select list that is one call to
+a registered UDA (``SELECT ema('20', Price) FROM `K` WHERE ... LIMIT
+n``), which Spark lacks as a SQL function: it resolves through the same
+registry as Query's function chain (plans/query.REGISTRY), over the
+statement's bucket.  Scalar UDAs (min/max/avg/count) are native SQL
+aggregates and pass through to Catalyst untouched — no reason to
+reimplement what the optimizer already vectorizes.
 """
 
 from __future__ import annotations
@@ -25,37 +26,23 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from marketstore_spark.catalog import Catalog, TimeBucketKey
-from marketstore_spark.operators.candler import (
-    candle_candles,
-    tick_candles,
-    timeframe_to_duration,
-)
+from marketstore_spark.catalog import Catalog
+from marketstore_spark.plans.query import REGISTRY, QueryParams, call_uda
 
 _TBK_RE = re.compile(r"`([^`]+/[^`]+/[^`]+)`")
 _INSERT_RE = re.compile(r"^\s*insert\s+into\s+`([^`]+)`\s+(.*)$", re.I | re.S)
 _CREATE_VIEW_RE = re.compile(
     r"^\s*create\s+view\s+(\w+)\s+as\s+(.*)$", re.I | re.S
 )
-_CANDLER_RE = re.compile(
-    r"^\s*select\s+(tickcandler|candlecandler|gap|adjust|ema|macd|atr|donchian"
-    r"|tickrule|nbbo|heikinashi|ichimoku|amihud"
-    r"|rollspread|autocorr|varratio|kylelambda|vpin|markout"
-    r"|rangevol|corwinschultz|kaufmaner|trimmedmean|realizedmoments|mfi|cci"
-    r"|aroon|adx|liquiditypanel|session_window|sessions|funnel|rfm)"
+# Spark SQL's own aggregates: these stay in the statement
+_NATIVE = ("min", "max", "avg", "count")
+_UDA_RE = re.compile(
+    r"^\s*select\s+(" + "|".join(n for n in REGISTRY if n not in _NATIVE) + r")"
     r"\s*\((.*?)\)\s+from\s+(\S+)"
     r"(?:\s+where\s+(.*?))?(?:\s+limit\s+(\d+))?\s*$",
     re.I | re.S,
 )
-
-
-def _pick_ts_col(df: DataFrame) -> str:
-    for c in ("ts", "Epoch", "epoch"):
-        if c in df.columns:
-            return c
-    raise ValueError(f"no timestamp column among {df.columns}")
 
 
 class MarketSQL:
@@ -107,589 +94,21 @@ class MarketSQL:
 
     def _select(self, stmt: str) -> DataFrame:
         stmt = self._register_tbks(stmt)
-        m = _CANDLER_RE.match(stmt)
+        m = _UDA_RE.match(stmt)
         if m is None:
             return self.spark.sql(stmt)
 
         fname, rawargs, view, where, limit = m.groups()
-        args = [a.strip() for a in rawargs.split(",") if a.strip()]
-        # zero-arg calls (rfm(), or a funnel() the arm rejects loudly)
-        # have no positional timeframe
-        timeframe = args[0].strip("'\"") if args else ""
-        cols = args[1:]
-        plain = [c for c in cols if "::" not in c]
-        sums = [c.split("::", 1)[1] for c in cols if c.lower().startswith("sum::")]
-        avgs = [c.split("::", 1)[1] for c in cols if c.lower().startswith("avg::")]
-
         base = self.spark.table(view)
         if where:
             base = base.filter(where)
-        ts_col = _pick_ts_col(base)
-
-        if fname.lower() == "gap":
-            # SELECT gap(1800) — threshold mode; gap() — z-score mode
-            # (uda/gap/gap.go's two modes through the SQL registry)
-            from marketstore_spark.operators import uda
-
-            tiebreak = [c for c in ("event_id",) if c in base.columns]
-            out = (
-                uda.gap_threshold(
-                    base, float(args[0].strip("'\"")), key_cols=(), ts_col=ts_col,
-                    order_tiebreak=tiebreak,
-                )
-                if args
-                else uda.gap_zscore(
-                    base, key_cols=(), ts_col=ts_col, order_tiebreak=tiebreak
-                )
-            )
-            if limit:
-                out = out.orderBy("prev_ts").limit(int(limit))
-            return out
-        if fname.lower() == "adjust":
-            # SELECT adjust('split,dividend', Price) — symbol comes from
-            # the statement's TBK, rate changes from the CA bucket
-            # (uda/adjust through the SQL registry + caloader)
-            from marketstore_spark.operators.ca import CA_BUCKET, adjust_with_actions
-
-            # re-split rawargs: quoted strings are kind lists (the
-            # naive comma split above severs them), bare words columns
-            parts = re.findall(r"'([^']*)'|\"([^\"]*)\"|([A-Za-z_]\w*)", rawargs)
-            kinds = [
-                k for a, b, _ in parts if (a or b) for k in (a or b).split(",") if k
-            ] or ["split", "dividend"]
-            price_cols = [c for _, _, c in parts if c]
-            symbol = self._view_keys.get(view, "/").split("/")[0]
-            out = adjust_with_actions(
-                base.withColumn("__symbol", F.lit(symbol)),
-                self.catalog.read(CA_BUCKET),
-                symbol_col="__symbol",
-                ts_col=ts_col,
-                price_col=price_cols[0] if price_cols else "value",
-                include_splits="split" in kinds or "reverse_split" in kinds,
-                include_dividends="dividend" in kinds,
-            ).drop("__symbol")
-            if limit:
-                out = out.orderBy(ts_col).limit(int(limit))
-            return out
-        if fname.lower() in ("ema", "macd", "atr", "donchian"):
-            # Indicator UDAs through the SQL registry (the reference
-            # resolves registered aggregators by name the same way —
-            # sqlparser/registry.go); the statement's TBK is one
-            # symbol, so the per-key operators run over a constant key.
-            #   ema('20', Price)  macd(Price)  macd('12,26,9', Price)
-            #   atr('14', '1D')   donchian('20', '1D')
-            tiebreak = [c for c in ("event_id",) if c in base.columns]
-            # re-split rawargs (the naive comma split severs quoted
-            # lists like '12,26,9' — the adjust-arm parsing rule).
-            # Bare number-led tokens (ema(5, value), atr(3, 1D, ...))
-            # are parameters exactly like their quoted forms — the gap
-            # arm accepts gap(1800) unquoted, so this registry does too;
-            # silently defaulting them would run the wrong indicator.
-            parts = re.findall(
-                r"'([^']*)'|\"([^\"]*)\"|(\d[\w.]*)|([A-Za-z_]\w*)", rawargs
-            )
-            quoted = [a or b or n for a, b, n, _ in parts if (a or b or n)]
-            colargs = [c for _, _, _, c in parts if c]
-            keyed = base.withColumn("__symbol", F.lit("_"))
-            name = fname.lower()
-            if name == "ema":
-                from marketstore_spark.operators.ewm import ema as ema_op
-
-                out = ema_op(
-                    keyed,
-                    span=int(quoted[0]) if quoted else 20,
-                    key_cols=("__symbol",),
-                    ts_col=ts_col,
-                    value_col=colargs[0] if colargs else "value",
-                    tiebreak=tiebreak,
-                ).drop("__symbol")
-            elif name == "macd":
-                from marketstore_spark.operators.ewm import macd as macd_op
-
-                fss = (
-                    [int(x) for q in quoted for x in q.split(",")]
-                    if quoted
-                    else [12, 26, 9]
-                )
-                out = macd_op(
-                    keyed,
-                    *fss,
-                    key_cols=("__symbol",),
-                    ts_col=ts_col,
-                    value_col=colargs[0] if colargs else "value",
-                    tiebreak=tiebreak,
-                ).drop("__symbol")
-            else:
-                from marketstore_spark.operators.quant import atr as atr_op
-                from marketstore_spark.operators.quant import donchian as don_op
-
-                n = int(quoted[0]) if quoted else (14 if name == "atr" else 20)
-                tf = (
-                    timeframe_to_duration(quoted[1])
-                    if len(quoted) > 1
-                    else "1 day"
-                )
-                fn_op = atr_op if name == "atr" else don_op
-                kwargs = dict(
-                    n=n,
-                    timeframe=tf,
-                    symbol_col="__symbol",
-                    ts_col=ts_col,
-                    value_col=colargs[0] if colargs else "value",
-                )
-                if name == "atr":
-                    kwargs["tiebreak_col"] = tiebreak[0] if tiebreak else ts_col
-                out = fn_op(keyed, **kwargs).drop("symbol")
-            if limit:
-                # LIMIT orders on the time axis like every other arm —
-                # the first output column is whatever the bucket schema
-                # leads with, which need not be unique or temporal.
-                order_cols = [
-                    c for c in (ts_col, "epoch", *tiebreak) if c in out.columns
-                ] or [out.columns[0]]
-                out = out.orderBy(*order_cols).limit(int(limit))
-            return out
-        if fname.lower() in ("heikinashi", "ichimoku", "amihud"):
-            # Round-7 indicator family through the registry (the
-            # ema/atr/nbbo precedent — sqlparser/registry.go resolves
-            # aggregators by name the same way):
-            #   heikinashi('1D', Price)
-            #   ichimoku('9,26,52', '1D', Price)   ichimoku('1D')
-            #   amihud('1D', Price, Volume)
-            tiebreak = [c for c in ("event_id",) if c in base.columns]
-            tb = tiebreak[0] if tiebreak else ts_col
-            parts = re.findall(
-                r"'([^']*)'|\"([^\"]*)\"|(\d[\w.]*)|([A-Za-z_]\w*)", rawargs
-            )
-            quoted = [a or b or n for a, b, n, _ in parts if (a or b or n)]
-            colargs = [c for _, _, _, c in parts if c]
-            keyed = base.withColumn("__symbol", F.lit("_"))
-            name = fname.lower()
-            common = dict(
-                symbol_col="__symbol",
-                ts_col=ts_col,
-                value_col=colargs[0] if colargs else "value",
-                tiebreak_col=tb,
-            )
-            if name == "heikinashi":
-                from marketstore_spark.operators.bars import heikin_ashi as ha_op
-
-                tf = timeframe_to_duration(quoted[0]) if quoted else "1 day"
-                out = ha_op(keyed, timeframe=tf, **common)
-            elif name == "ichimoku":
-                from marketstore_spark.operators.quant import ichimoku as ich_op
-
-                # a comma-list leads ('9,26,52'); a lone token is the
-                # timeframe (the macd quoted-list parsing rule)
-                periods = [9, 26, 52]
-                tfq = quoted
-                if quoted and "," in quoted[0]:
-                    periods = [int(x) for x in quoted[0].split(",")]
-                    tfq = quoted[1:]
-                tf = timeframe_to_duration(tfq[0]) if tfq else "1 day"
-                out = ich_op(
-                    keyed,
-                    *periods,
-                    timeframe=tf,
-                    **common,
-                )
-            else:
-                from marketstore_spark.operators.quant import (
-                    amihud_illiquidity as ami_op,
-                )
-
-                # the tickrule volume guard: a price-weighted flow
-                # (volume_col == price) is a plausible-looking wrong
-                # answer, so a missing volume column is an error
-                if len(colargs) > 1:
-                    vol = colargs[1]
-                elif "volume" in base.columns:
-                    vol = "volume"
-                else:
-                    raise ValueError(
-                        "amihud needs a volume column: "
-                        "amihud('1D', Price, Volume), or a 'volume' "
-                        "column in the bucket"
-                    )
-                tf = timeframe_to_duration(quoted[0]) if quoted else "1 day"
-                out = ami_op(keyed, timeframe=tf, volume_col=vol, **common)
-            out = out.drop("symbol")
-            if limit:
-                out = out.orderBy("epoch").limit(int(limit))
-            return out
-        if fname.lower() in (
-            "rollspread",
-            "autocorr",
-            "varratio",
-            "kylelambda",
-            "vpin",
-            "markout",
-            "rangevol",
-            "corwinschultz",
-            "kaufmaner",
-            "trimmedmean",
-            "realizedmoments",
-            "mfi",
-            "cci",
-            "aroon",
-            "adx",
-            "liquiditypanel",
-        ):
-            # Round-8 serial-dependence + range-estimator family
-            # through the registry:
-            #   rollspread('1D', Price)      autocorr('1D', Price)
-            #   varratio('5', '1D', Price)   kylelambda('1H', Price, Volume)
-            #   vpin('2000', '10', Price, Volume)
-            #   markout('3', '1H', Price)
-            #   rangevol('1D', Price)        corwinschultz('1D', Price)
-            #   kaufmaner('10', '1D', Price) trimmedmean('5', '1D', Price)
-            #   realizedmoments('1D', Price) mfi('14', '1D', Price, Volume)
-            #   cci('14', '1D', Price)       aroon('25', '1D', Price)
-            #   adx('14', '1D', Price)      liquiditypanel('5', '1D', Price)
-            tiebreak = [c for c in ("event_id",) if c in base.columns]
-            tb = tiebreak[0] if tiebreak else ts_col
-            parts = re.findall(
-                r"'([^']*)'|\"([^\"]*)\"|(\d[\w.]*)|([A-Za-z_]\w*)", rawargs
-            )
-            quoted = [a or b or n for a, b, n, _ in parts if (a or b or n)]
-            colargs = [c for _, _, _, c in parts if c]
-            keyed = base.withColumn("__symbol", F.lit("_"))
-            name = fname.lower()
-            common = dict(
-                symbol_col="__symbol",
-                ts_col=ts_col,
-                value_col=colargs[0] if colargs else "value",
-                tiebreak_col=tb,
-            )
-
-            def _vol_guard(what: str) -> str:
-                # the tickrule precedent: volume must be explicit or a
-                # real 'volume' column — price-weighted flow is a
-                # plausible-looking wrong answer
-                if len(colargs) > 1:
-                    return colargs[1]
-                if "volume" in base.columns:
-                    return "volume"
-                raise ValueError(
-                    f"{what} needs a volume column: {what}(..., Price, "
-                    "Volume), or a 'volume' column in the bucket"
-                )
-
-            if name in (
-                "rollspread",
-                "autocorr",
-                "rangevol",
-                "corwinschultz",
-                "realizedmoments",
-            ):
-                from marketstore_spark.operators.quant import (
-                    autocorr_returns,
-                    corwin_schultz,
-                    range_vol,
-                    realized_moments,
-                    roll_spread,
-                )
-
-                tf = timeframe_to_duration(quoted[0]) if quoted else "1 day"
-                op = {
-                    "rollspread": roll_spread,
-                    "autocorr": autocorr_returns,
-                    "rangevol": range_vol,
-                    "corwinschultz": corwin_schultz,
-                    "realizedmoments": realized_moments,
-                }[name]
-                out = op(keyed, timeframe=tf, **common)
-            elif name == "liquiditypanel":
-                from marketstore_spark.operators.quant import liquidity_panel
-
-                q_ = int(quoted[0]) if quoted else 5
-                tf = (
-                    timeframe_to_duration(quoted[1])
-                    if len(quoted) > 1
-                    else "1 day"
-                )
-                out = liquidity_panel(keyed, q=q_, timeframe=tf, **common)
-            elif name == "kaufmaner":
-                from marketstore_spark.operators.quant import kaufman_er
-
-                n_ = int(quoted[0]) if quoted else 10
-                tf = (
-                    timeframe_to_duration(quoted[1])
-                    if len(quoted) > 1
-                    else "1 day"
-                )
-                out = kaufman_er(keyed, n=n_, timeframe=tf, **common)
-            elif name == "trimmedmean":
-                from marketstore_spark.operators.quant import trimmed_mean
-
-                pct = int(quoted[0]) if quoted else 5
-                tf = (
-                    timeframe_to_duration(quoted[1])
-                    if len(quoted) > 1
-                    else "1 day"
-                )
-                out = trimmed_mean(keyed, trim_pct=pct, timeframe=tf, **common)
-            elif name in ("cci", "aroon", "adx"):
-                from marketstore_spark.operators.quant import adx as adx_op
-                from marketstore_spark.operators.quant import aroon as aroon_op
-                from marketstore_spark.operators.quant import cci as cci_op
-
-                op = {"cci": cci_op, "aroon": aroon_op, "adx": adx_op}[name]
-                nn = int(quoted[0]) if quoted else (25 if name == "aroon" else 14)
-                tf = (
-                    timeframe_to_duration(quoted[1])
-                    if len(quoted) > 1
-                    else "1 day"
-                )
-                out = op(keyed, n=nn, timeframe=tf, **common)
-            elif name == "mfi":
-                from marketstore_spark.operators.quant import mfi as mfi_op
-
-                nn = int(quoted[0]) if quoted else 14
-                tf = (
-                    timeframe_to_duration(quoted[1])
-                    if len(quoted) > 1
-                    else "1 day"
-                )
-                out = mfi_op(
-                    keyed,
-                    n=nn,
-                    timeframe=tf,
-                    volume_col=_vol_guard("mfi"),
-                    **common,
-                )
-            elif name == "varratio":
-                from marketstore_spark.operators.quant import variance_ratio
-
-                q_ = int(quoted[0]) if quoted else 5
-                tf = (
-                    timeframe_to_duration(quoted[1])
-                    if len(quoted) > 1
-                    else "1 day"
-                )
-                out = variance_ratio(keyed, q=q_, timeframe=tf, **common)
-            elif name == "kylelambda":
-                from marketstore_spark.operators.quant import kyle_lambda
-
-                tf = timeframe_to_duration(quoted[0]) if quoted else "1 hour"
-                out = kyle_lambda(
-                    keyed, timeframe=tf, volume_col=_vol_guard("kylelambda"),
-                    **common,
-                )
-            elif name == "vpin":
-                from marketstore_spark.operators.bars import vpin as vpin_op
-
-                bv = int(quoted[0]) if quoted else 2000
-                nn = int(quoted[1]) if len(quoted) > 1 else 10
-                out = vpin_op(
-                    keyed,
-                    bucket_volume=bv,
-                    n=nn,
-                    volume_col=_vol_guard("vpin"),
-                    **common,
-                )
-            else:
-                from marketstore_spark.operators.quant import markout_returns
-
-                hz = int(quoted[0]) if quoted else 3
-                tf = (
-                    timeframe_to_duration(quoted[1])
-                    if len(quoted) > 1
-                    else "1 hour"
-                )
-                out = markout_returns(keyed, horizon=hz, timeframe=tf, **common)
-            out = out.drop("symbol")
-            if limit:
-                order_cols = [
-                    c
-                    for c in ("epoch", "bucket_id", "hour")
-                    if c in out.columns
-                ] or [out.columns[0]]
-                out = out.orderBy(*order_cols).limit(int(limit))
-            return out
-        if fname.lower() in ("tickrule", "nbbo"):
-            # Microstructure UDAs through the registry:
-            #   tickrule(Price, Volume) — Lee-Ready signing + order flow
-            #   nbbo('1Min')            — consolidated best bid/offer
-            from marketstore_spark.operators.quant import nbbo as nbbo_op
-            from marketstore_spark.operators.quant import tick_rule as tr_op
-
-            tiebreak = [c for c in ("event_id",) if c in base.columns]
-            tb = tiebreak[0] if tiebreak else ts_col
-            # Number-led bare tokens (nbbo(5Min)) are parameters like
-            # their quoted forms — the indicator arm's parsing rule;
-            # without the (\d[\w.]*) alternative '5Min' tokenizes to
-            # the identifier 'Min' and the timeframe silently defaults.
-            parts = re.findall(
-                r"'([^']*)'|\"([^\"]*)\"|(\d[\w.]*)|([A-Za-z_]\w*)", rawargs
-            )
-            quoted = [a or b or n for a, b, n, _ in parts if (a or b or n)]
-            colargs = [c for _, _, _, c in parts if c]
-            keyed = base.withColumn("__symbol", F.lit("_"))
-            if fname.lower() == "tickrule":
-                # Volume defaults to the bucket's 'volume' column; a
-                # price-weighted flow (volume_col == price) is a
-                # plausible-looking wrong answer, so a missing volume
-                # column is an error, not a silent fallback.
-                if len(colargs) > 1:
-                    vol = colargs[1]
-                elif "volume" in base.columns:
-                    vol = "volume"
-                else:
-                    raise ValueError(
-                        "tickrule needs a volume column: "
-                        "tickrule(Price, Volume), or a 'volume' column "
-                        "in the bucket"
-                    )
-                out = tr_op(
-                    keyed,
-                    symbol_col="__symbol",
-                    ts_col=ts_col,
-                    value_col=colargs[0] if colargs else "value",
-                    volume_col=vol,
-                    tiebreak_col=tb,
-                ).drop("symbol")
-                order_col = "epoch"
-            else:
-                tf = (
-                    timeframe_to_duration(quoted[0])
-                    if quoted
-                    else "1 minute"
-                )
-                venue = colargs[0] if colargs else None
-                if venue is None:
-                    keyed = keyed.withColumn("__venue", F.lit("_"))
-                    venue = "__venue"
-                # Without event_id the tiebreak falls back to the
-                # timestamp; deriving synthetic bid/ask sides then
-                # evaluates pmod(<timestamp>, 4), which fails analysis
-                # with a cryptic DATATYPE_MISMATCH — fail loud instead
-                # (the tickrule volume guard's treatment).
-                has_sides = "bid_c" in base.columns and "ask_c" in base.columns
-                if not tiebreak and not has_sides:
-                    raise ValueError(
-                        "nbbo needs either an integer 'event_id' tiebreak "
-                        "column (to derive synthetic bid/ask sides) or "
-                        "pre-sided 'bid_c'/'ask_c' columns in the bucket"
-                    )
-                out = nbbo_op(
-                    keyed,
-                    timeframe=tf,
-                    symbol_col="__symbol",
-                    ts_col=ts_col,
-                    venue_col=venue,
-                    tiebreak_col=tb,
-                ).drop("symbol")
-                order_col = "epoch"
-            if limit:
-                out = out.orderBy(order_col).limit(int(limit))
-            return out
-        if fname.lower() in ("sessions", "session_window", "funnel", "rfm"):
-            # Event-analytics UDAs through the registry (round 10) —
-            # the reference resolves aggregators by NAME from a
-            # pluggable registry (sqlparser/registry.go), so the
-            # event-sequence operators mount the same way over an
-            # events-shaped bucket (user_id + ts [+ event_type/value]):
-            #   sessions(1800)            — gap-based sessionization
-            #   funnel('view,click,buy')  — ordered funnel counts
-            #   funnel('a,b', 86400000000)  — optional chain window µs
-            #   rfm(value)                — RFM quintile segments
-            parts = re.findall(
-                r"'([^']*)'|\"([^\"]*)\"|(\d[\w.]*)|([A-Za-z_]\w*)", rawargs
-            )
-            quoted = [a or b or n for a, b, n, _ in parts if (a or b or n)]
-            colargs = [c for _, _, _, c in parts if c]
-            name = fname.lower()
-            if "user_id" not in base.columns:
-                # fail loud — a synthetic single-user default would
-                # return plausible-looking wrong counts (the tickrule
-                # volume-guard treatment)
-                raise ValueError(f"{name} needs a user_id column in the bucket")
-            tiebreak = [c for c in ("event_id",) if c in base.columns]
-            tb = tiebreak[0] if tiebreak else ts_col
-            if name == "sessions":
-                from marketstore_spark.operators.sessionize import sessionize
-
-                gap = int(float(quoted[0])) if quoted else 1800
-                out = sessionize(
-                    base,
-                    gap_seconds=gap,
-                    key_cols=("user_id",),
-                    ts_col=ts_col,
-                    tiebreak=tuple(tiebreak) or (ts_col,),
-                )
-                order_cols = ["user_id", "session_id"]
-            elif name == "session_window":
-                # session_window(1800) — the NATIVE F.session_window
-                # grouping (21g's engine form): identical session
-                # boundaries to sessions(), but the same query text
-                # runs unchanged (plus a watermark) on the live feed
-                # via streaming.sessions.stream_sessions
-                from marketstore_spark.streaming.sessions import (
-                    session_window_agg,
-                )
-
-                gap = int(float(quoted[0])) if quoted else 1800
-                out = session_window_agg(
-                    base, gap_seconds=gap, key_col="user_id", ts_col=ts_col
-                )
-                order_cols = ["user_id", "session_start"]
-            elif name == "funnel":
-                from marketstore_spark.operators.funnel import event_funnel
-
-                if "event_type" not in base.columns:
-                    raise ValueError("funnel needs an event_type column")
-                if not quoted:
-                    raise ValueError("funnel needs a step list: funnel('a,b,c')")
-                steps = [s.strip() for s in quoted[0].split(",") if s.strip()]
-                window_us = int(float(quoted[1])) if len(quoted) > 1 else None
-                out = event_funnel(
-                    base,
-                    steps,
-                    window_us=window_us,
-                    user_col="user_id",
-                    ts_col=ts_col,
-                    tiebreak_col=tb,
-                )
-                order_cols = ["step"]
-            else:  # rfm
-                from marketstore_spark.operators.funnel import rfm_segments
-
-                val = colargs[0] if colargs else "value"
-                out = rfm_segments(
-                    base, user_col="user_id", ts_col=ts_col, value_col=val
-                )
-                order_cols = ["r_score", "f_score", "m_score"]
-            if limit:
-                out = out.orderBy(*order_cols).limit(int(limit))
-            return out
-        if fname.lower() == "tickcandler":
-            # tickcandler('5Min', Price, Sum::Volume) — one price column
-            # (tickcandler.go:Init), extras tagged Sum::/Avg::.
-            tiebreak = [c for c in ("event_id",) if c in base.columns]
-            out = tick_candles(
-                base,
-                timeframe,
-                key_cols=(),
-                ts_col=ts_col,
-                price_col=plain[0],
-                sum_cols=sums,
-                avg_cols=avgs,
-                tiebreak=tiebreak,
-            )
-        else:
-            # candlecandler('12Min', Open, High, Low, Close, Sum::Volume)
-            if len(plain) != 4:
-                raise ValueError("candlecandler needs Open, High, Low, Close columns")
-            out = candle_candles(
-                base,
-                timeframe,
-                key_cols=(),
-                ts_col=ts_col,
-                ohlc=tuple(plain),
-                sum_cols=sums,
-                avg_cols=avgs,
-            )
-        if limit:
-            out = out.orderBy("epoch").limit(int(limit))
-        return out
+        # the statement's TBK is one symbol: the registry runs the UDA
+        # over a constant key (adjust() joins the CA bucket on it)
+        symbol = self._view_keys.get(view, "/").split("/")[0]
+        return call_uda(
+            base,
+            f"{fname}({rawargs})",
+            QueryParams(symbols=[symbol], symbol_col=None),
+            self.catalog,
+            limit=int(limit) if limit else None,
+        )

@@ -147,10 +147,7 @@ class DataService:
         for req in params.get("requests", []):
             tbk = req["key"]
             data = req["data"]  # ColumnSeries map; ts columns in epoch ns
-            pdf = pd.DataFrame(data["columns"])
-            for c in data.get("ts_columns", ["ts"]):
-                if c in pdf.columns:
-                    pdf[c] = pd.to_datetime(pdf[c], unit="ns")
+            pdf = _ns_frame(data)
             self.client.write(pdf, tbk, mode=req.get("mode", "append"))
             responses.append({"error": None, "version": None})
         return {"responses": responses}
@@ -159,10 +156,7 @@ class DataService:
     def Create(self, params: dict) -> dict:
         responses = []
         for req in params.get("requests", []):
-            sample = pd.DataFrame(req["columns"])
-            for c in req.get("ts_columns", ["ts"]):
-                if c in sample.columns:
-                    sample[c] = pd.to_datetime(sample[c], unit="ns")
+            sample = _ns_frame(req)
             self.catalog.create(
                 req["key"], self.catalog.spark.createDataFrame(sample)
             )
@@ -222,6 +216,16 @@ def _ns_ts(epoch_ns):
     return pd.Timestamp(epoch_ns, unit="ns")
 
 
+def _ns_frame(req: dict) -> pd.DataFrame:
+    """A request's ``columns`` ColumnSeries map as pandas, its epoch-ns
+    ``ts_columns`` (default ``ts``; those present) as datetimes."""
+    pdf = pd.DataFrame(req["columns"])
+    for c in req.get("ts_columns", ["ts"]):
+        if c in pdf.columns:
+            pdf[c] = pd.to_datetime(pdf[c], unit="ns")
+    return pdf
+
+
 class _Handler(BaseHTTPRequestHandler):
     service: DataService  # set by make_server
     hub = None  # optional streaming.pubsub.StreamHub, set by make_server
@@ -247,7 +251,6 @@ class _Handler(BaseHTTPRequestHandler):
         # flag a prior msgpack POST on this keep-alive connection left
         # set on the handler instance.
         self._msgpack = False
-        import hashlib
         import time
         import urllib.parse as up
 

@@ -36,11 +36,12 @@ Usage:  python tools/audit_scans.py [--sf /root/testdata/sf0.01] [keys...]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -52,7 +53,7 @@ def main() -> int:
     from marketstore_spark import get_session
     from marketstore_spark.queries import SPARK_QUERIES
 
-    spark = get_session("audit-scans", master="local[8]")
+    spark = get_session("audit-scans")
     spark.sparkContext.setLogLevel("ERROR")
     keys = args.keys or list(SPARK_QUERIES)
     flagged = 0

@@ -48,7 +48,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", os.environ.get("PLAN_ROUND", "r14"))
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_session("plan-dump", master="local[8]", shuffle_partitions=8)
+    spark = get_session("plan-dump", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         fn = SPARK_QUERIES[name]

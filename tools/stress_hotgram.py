@@ -26,10 +26,11 @@ Usage:  python tools/stress_hotgram.py [--docs 1000000] [--heap 3g]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(argv=None) -> int:
@@ -43,7 +44,6 @@ def main(argv=None) -> int:
 
     spark = get_session(
         "hotgram-stress",
-        master="local[8]",
         extra_conf={"spark.driver.memory": args.heap},
     )
     spark.sparkContext.setLogLevel("ERROR")
