@@ -51,10 +51,6 @@ class QueryParams:
     ts_col: str = "ts"
     value_col: str = "value"
     tiebreak: Sequence[str] = ("event_id",)
-    # corporate-actions table for the adjust() UDA — the reference's
-    # adjust loads this from the catalog's CA bucket (uda/adjust/
-    # caloader.go); with a catalog at hand adjust() reads it from there
-    ca_df: DataFrame | None = None
 
 
 # -- one call's scope ------------------------------------------------------
@@ -148,17 +144,16 @@ def _gap(c: _Call, threshold: float | None) -> DataFrame:
 
 def _adjust(c: _Call, kinds: list[str] | None, price_col: str) -> DataFrame:
     """adjust('split,dividend', Price): backward price adjustment
-    against the catalog's CA table (uda/adjust; GetRateChanges'
-    includeSplits / includeDividends map to the kind list)."""
-    ca = c.p.ca_df
-    if ca is None and c.catalog is not None:
-        ca = c.catalog.read(CA_BUCKET)
-    if ca is None:
+    against the catalog's CA bucket, as the reference's caloader reads
+    it (uda/adjust; GetRateChanges' includeSplits / includeDividends
+    map to the kind list)."""
+    if c.catalog is None:
         raise ValueError(
-            "adjust() needs a corporate-actions table: populate the "
-            "CA/EVENT/ACTIONS bucket (operators/ca.ingest_announcements) "
-            "or set QueryParams.ca_df"
+            "adjust() reads the corporate-actions table from a catalog's "
+            "CA/EVENT/ACTIONS bucket (operators/ca.ingest_announcements): "
+            "call it through Client.query or MarketSQL"
         )
+    ca = c.catalog.read(CA_BUCKET)
     kinds = kinds or ["split", "dividend"]
     df, sym = c.keyed()
     return adjust_with_actions(
@@ -280,10 +275,12 @@ class Uda:
     numeric parameter reads one item of a quoted comma list
     (``macd('12,26,9')``), and a trailing LIST takes every token left.
     ``cols`` are ``(name, default column)``, bound in order to the
-    call's bare identifiers; a defaulted column must exist in the frame.
+    call's bare identifiers, then to quoted names no parameter took; a
+    defaulted column must exist in the frame.
     ``needs`` are columns the frame must have; ``order`` the columns a
     SQL ``LIMIT`` orders by (those the result has, else its first);
-    ``tags`` whether Sum::/Avg:: tags bind as ``sum_cols``/``avg_cols``.
+    ``tags`` whether Sum::/Avg:: tags, bare or quoted, bind as
+    ``sum_cols``/``avg_cols``.
     """
 
     op: Callable[..., DataFrame]
@@ -412,6 +409,8 @@ REGISTRY: dict[str, Uda] = {
 # -- calls -----------------------------------------------------------------
 
 _TOKEN_RE = re.compile(r"""'([^']*)'|"([^"]*)"|(\w+::\w+)|(-?\d[\w.]*)|([A-Za-z_]\w*)""")
+_TAG_RE = re.compile(r"(sum|avg)::\w+$", re.I)
+_IDENT_RE = re.compile(r"[A-Za-z_]\w*$")
 
 
 def parse_call(call: str) -> tuple[str, list[str], list[str], list[str]]:
@@ -436,7 +435,12 @@ def _bind(name: str, u: Uda, c: _Call, params, tags, cols) -> dict:
     """The keyword arguments of ``u.op`` for one call's tokens, or a
     ValueError naming what the call got wrong."""
     kw = {}
-    toks = list(params)
+    toks, tags, cols = list(params), list(tags), list(cols)
+    if len(u.params) == 1 and u.params[0][1] is LIST and not toks:
+        # adjust(split): a bare word naming no column of the frame is an
+        # item of the entry's one list parameter
+        toks = [x for x in cols if x not in c.columns]
+        cols = [x for x in cols if x in c.columns]
     for i, (pname, kind, default) in enumerate(u.params):
         accepts, value = kind
         if not toks or not accepts(toks[0] if kind is LIST else toks[0].split(",")[0]):
@@ -450,7 +454,17 @@ def _bind(name: str, u: Uda, c: _Call, params, tags, cols) -> dict:
             if rest:
                 toks.insert(0, rest)
             kw[pname] = value(head)
-    extra = [*toks, *cols[len(u.cols) :], *(tags if not u.tags else [])]
+    # a quoted token no parameter took is a tag or a column, as the
+    # chain read max('Price') or tickcandler('1H', 'Sum::Volume')
+    extra = []
+    for t in toks:
+        if u.tags and _TAG_RE.match(t):
+            tags.append(t)
+        elif _IDENT_RE.match(t) and len(cols) < len(u.cols):
+            cols.append(t)
+        else:
+            extra.append(t)
+    extra += [*cols[len(u.cols) :], *(tags if not u.tags else [])]
     if extra:
         raise ValueError(f"{name}() does not take the argument(s) {extra}")
     for (cname, default), given in zip(u.cols, cols + [None] * len(u.cols)):
@@ -481,7 +495,7 @@ def call_uda(
 ) -> DataFrame:
     """Apply one registered UDA call to ``df``; with ``limit``, the
     first rows in the entry's order.  ``catalog`` supplies the CA
-    bucket to adjust() when ``params.ca_df`` is unset."""
+    bucket to adjust()."""
     name, args, tags, cols = parse_call(call)
     u = REGISTRY.get(name)
     if u is None:
@@ -493,7 +507,7 @@ def call_uda(
     out = u.op(c, **_bind(name, u, c, args, tags, cols))
     if not params.symbol_col:
         out = out.drop("__symbol")
-    if limit:
+    if limit is not None:
         marks = {TS: [c.ts], TIEBREAK: c.tiebreak}
         order = [o for m in u.order for o in marks.get(m, [m]) if o in out.columns]
         out = out.orderBy(*(order or out.columns[:1])).limit(limit)

@@ -110,5 +110,5 @@ class MarketSQL:
             f"{fname}({rawargs})",
             QueryParams(symbols=[symbol], symbol_col=None),
             self.catalog,
-            limit=int(limit) if limit else None,
+            limit=int(limit) if limit is not None else None,
         )

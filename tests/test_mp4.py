@@ -113,6 +113,12 @@ def test_corrupt_and_foreign_payloads_raise_valueerror():
     struct.pack_into(">I", bad, pos + 12, len(bad) + 1000)
     with pytest.raises(ValueError):
         list(decode_mp4_frames(bytes(bad)))
+    # a uniform sample size with a 2^32 - 1 count is refused before the
+    # sample table is expanded, not allocated
+    bad = bytearray(mp4)
+    struct.pack_into(">II", bad, bad.find(b"stsz") + 8, 1, 0xFFFFFFFF)
+    with pytest.raises(ValueError, match="stsz"):
+        list(decode_mp4_frames(bytes(bad)))
     # audio-only container: hdlr vide → soun is the honest NIE fence
     soun = mp4.replace(b"vide", b"soun", 1)
     with pytest.raises(NotImplementedError):

@@ -119,6 +119,41 @@ def test_guards_raise_the_same_error_from_both_fronts(cli, key, call, match):
     assert str(chain.value) == str(sql.value)
 
 
+@pytest.mark.parametrize(
+    "key, call, same_as",
+    [
+        # the chain once stripped the quotes from every argument, so a
+        # quoted name or tag worked where a bare one does
+        ("AAPL/1D/TICK", "adjust(split)", "adjust('split')"),
+        ("AAPL/1D/TICK", "adjust(split, dividend)", "adjust('split,dividend')"),
+        ("PX/1Min/TICK", "max('px')", "max(px)"),
+        ("EV1/1Min/TICK", "obv('event_id')", "obv(event_id)"),
+        ("PX/1Min/TICK", "tickcandler('1H', 'px')", "tickcandler('1H', px)"),
+        ("EV1/1Min/TICK", "tickcandler('1H','Sum::event_id')",
+         "tickcandler('1H', value, Sum::event_id)"),
+    ],
+)
+def test_quoted_names_bind_as_the_chain_took_them(cli, key, call, same_as):
+    got, want = _chain(cli, key, call), _chain(cli, key, same_as)
+    assert got.columns == want.columns
+    assert want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_sql_limit_zero_returns_no_rows(cli):
+    stmt = "SELECT tickcandler('5Min', value) FROM `EV1/1Min/TICK` LIMIT {}"
+    assert cli.sql(stmt.format(0)).count() == 0
+    assert cli.sql(stmt.format(2)).count() == 2
+
+
+def test_adjust_needs_a_catalog(spark):
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 5), 100.0)], "user_id long, ts timestamp, value double"
+    )
+    with pytest.raises(ValueError, match="CA/EVENT/ACTIONS"):
+        run_query(df, QueryParams(functions=["adjust('split')"]))
+
+
 def test_unknown_function_is_named(cli):
     with pytest.raises(ValueError, match="'nosuch'"):
         _chain(cli, "EV1/1Min/TICK", "nosuch(1)")
