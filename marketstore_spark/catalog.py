@@ -18,7 +18,7 @@ import os
 import shutil
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marketstore_spark import txn
@@ -282,12 +282,16 @@ class Catalog:
 
         Registered triggers fire AFTER the commit — same guarantee as
         plugins/trigger (content durable before Fire)."""
-        txn_mode = "replace" if mode == "overwrite" else "append"
+        self._commit(key, df, df, mode="replace" if mode == "overwrite" else "append")
+
+    def _commit(self, key: str, df: DataFrame, written: DataFrame | None, **how) -> None:
+        """Publish ``df``; the rows it adds (``written``) fire ``key``'s triggers."""
         with self.metrics.time("write_duration_seconds"):
-            txn.commit_write(df, TimeBucketKey(key).path(self.root), mode=txn_mode)
-        self.metrics.inc("writes_total")
-        if self.triggers is not None:
-            self.triggers.fire(key, df)
+            txn.commit_write(df, TimeBucketKey(key).path(self.root), **how)
+        if written is not None:
+            self.metrics.inc("writes_total")
+            if self.triggers is not None:
+                self.triggers.fire(key, written)
 
     def read(self, key: str, version: int | None = None) -> DataFrame:
         """Scan the bucket's committed snapshot (explicit manifest file
@@ -298,24 +302,33 @@ class Catalog:
             self.spark, TimeBucketKey(key).path(self.root), version=version
         )
 
+    def _replace_where(
+        self, key: str, drop: Column, new: DataFrame | None = None
+    ) -> DataFrame | None:
+        """One replace commit, Delta's ``replaceWhere``: from one
+        snapshot, drop the rows where ``drop`` holds (a NULL keeps the
+        row), union in ``new`` and publish once on that base version
+        (concurrent appends merge, a concurrent replace raises
+        CommitConflictError).  Readers see the old version until the
+        flip, and a crash before it leaves that version current.
+        Returns the snapshot, or None when ``new`` creates the bucket."""
+        path = TimeBucketKey(key).path(self.root)
+        base = txn.current_version(path)
+        old = self.read(key, version=base) if new is None or os.path.isdir(path) else None
+        out = new
+        if old is not None:
+            out = old.filter(~F.coalesce(drop, F.lit(False)))
+            out = out if new is None else out.unionByName(new)
+        self._commit(key, out, new, mode="replace", base_version=base)
+        return old
+
     # -- Delete (executor/delete.go) --------------------------------------
     def delete_range(self, key: str, start, end, ts_col: str = "ts") -> int:
-        """Delete rows in [start, end] from a bucket; returns rows
-        removed.  The kept rows are staged by a distributed rewrite and
-        published as a replace-commit: readers see the old version
-        until the manifest flips — no gone-window, and a crash leaves
-        the old version current.  At scale (date-partitioned layout,
-        sources/parquet.py) the rewrite touches only affected dates."""
-        path = TimeBucketKey(key).path(self.root)
-        base = txn.current_version(path)  # snapshot the rewrite plans from
-        df = self.read(key, version=base)
-        keep = df.filter(
-            ~((F.col(ts_col) >= F.lit(start)) & (F.col(ts_col) <= F.lit(end)))
-        )
-        before = df.count()
-        txn.commit_write(keep, path, mode="replace", base_version=base)
-        after = self.read(key).count()
-        return before - after
+        """Delete rows in [start, end] from a bucket in one replace
+        commit (``_replace_where``); returns the rows removed, counted
+        once on the snapshot the commit replaced."""
+        in_range = (F.col(ts_col) >= F.lit(start)) & (F.col(ts_col) <= F.lit(end))
+        return self._replace_where(key, in_range).filter(in_range).count()
 
     # -- Compaction --------------------------------------------------------
     def compact(self, key: str, target_file_mb: int = 128) -> dict:

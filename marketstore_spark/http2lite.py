@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import socket
 import struct
+import time
 
 from marketstore_spark.hpacklite import Decoder as HpackDecoder
 from marketstore_spark.hpacklite import Encoder as HpackEncoder
@@ -354,6 +355,16 @@ class H2Server(_ConnectionCore):
                     struct.pack("!II", 0, exc.code)
                     + str(exc).encode()[:128],
                 )
+                # Half-close and drain the peer's unread input (2 s at
+                # most) before closing: a close with input unread makes
+                # the kernel reset the connection, and the reset can
+                # drop the GOAWAY before the peer reads it.
+                self.sock.shutdown(socket.SHUT_WR)
+                deadline = time.monotonic() + 2.0
+                while (left := deadline - time.monotonic()) > 0:
+                    self.sock.settimeout(left)
+                    if not self.sock.recv(65536):
+                        break
             except OSError:
                 pass
         finally:

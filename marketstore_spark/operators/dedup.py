@@ -470,19 +470,6 @@ def _minhash_cols(num_hashes: int) -> list[Column]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    n: int = 3,
-    num_hashes: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signature per doc: mh_i = min over shingles of
-    md5(i + '|' + shingle) (hex-string minimum — engine-portable)."""
-    sh = word_shingles(df, n, text_col, id_col)
-    return sh.groupBy("doc_id").agg(*_minhash_cols(num_hashes))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     n: int = 3,

@@ -2771,17 +2771,6 @@ def _check_picture_complete(ctx: _FrameCtx) -> None:
         raise ValueError("picture incomplete (slices do not cover it)")
 
 
-def _decode_idr_slice(rbsp: bytes, sps: dict, pps: dict, idr: bool,
-                      ref_idc: int) -> np.ndarray:
-    """Stateless single-slice IDR decode (kept for the all-intra
-    single-slice callers)."""
-    ctx, hdr = _decode_slice(
-        rbsp, {sps["sps_id"]: sps}, {pps["pps_id"]: pps}, idr, ref_idc, []
-    )
-    _check_picture_complete(ctx)
-    return _ctx_to_rgb(ctx, hdr["sps"])
-
-
 def split_annexb(data: bytes) -> list[bytes]:
     """Annex-B byte stream → list of NAL units (header byte + EBSP)."""
     nals = []
@@ -3021,14 +3010,6 @@ def parse_avcc_maps(
     return sps_map, pps_map, length_size
 
 
-def parse_avcc(avcc: bytes) -> tuple[dict, dict, int]:
-    """avcC payload → (first sps, first pps, nal_length_size) — the
-    single-set convenience form; multi-set tracks go through
-    :func:`parse_avcc_maps` / :class:`AvccDecoder`."""
-    sps_map, pps_map, length_size = parse_avcc_maps(avcc)
-    return next(iter(sps_map.values())), next(iter(pps_map.values())), length_size
-
-
 def _iter_sample_nals(sample: bytes, length_size: int):
     pos = 0
     while pos + length_size <= len(sample):
@@ -3129,40 +3110,3 @@ class AvccDecoder:
             del self._dpb[max(sps["max_num_ref"], 1):]
             self._prev_fn = hdr0["frame_num"]
         return _ctx_to_rgb(ctx, sps)
-
-
-def decode_avcc_sample(sample: bytes, sps: dict, pps: dict,
-                       length_size: int) -> np.ndarray:
-    """One length-prefixed 'avc1' sample → RGB frame, STATELESS (IDR
-    only, multi-slice allowed; P slices need :class:`AvccDecoder`'s
-    reference state)."""
-    ctx = None
-    n_slices = 0
-    sps_map = {sps["sps_id"]: sps}
-    pps_map = {pps["pps_id"]: pps}
-    for nal in _iter_sample_nals(sample, length_size):
-        nal_type = nal[0] & 0x1F
-        ref_idc = (nal[0] >> 5) & 3
-        if nal_type == 5:
-            rbsp = ebsp_to_rbsp(nal[1:])
-            if ctx is None:
-                if peek_first_mb(rbsp) != 0:
-                    raise ValueError("sample starts mid-picture")
-                ctx, _hdr = _decode_slice(
-                    rbsp, sps_map, pps_map, True, ref_idc, []
-                )
-            else:
-                ctx, _hdr = _decode_slice(
-                    rbsp, sps_map, pps_map, True, ref_idc, [],
-                    ctx=ctx, slice_idx=n_slices,
-                )
-            n_slices += 1
-        elif nal_type == 1:
-            raise NotImplementedError(
-                "non-IDR sample in stateless decode (use AvccDecoder)"
-            )
-        # in-band SPS/PPS/SEI inside a sample are ignored (avcC rules)
-    if ctx is None:
-        raise ValueError("sample contains no IDR slice")
-    _check_picture_complete(ctx)
-    return _ctx_to_rgb(ctx, sps)

@@ -268,40 +268,6 @@ def _plane_component(seed: str, p: int, i: int) -> float:
     return int(h, 16) / float(2**59) - 1.0
 
 
-def hyperplane_signature(
-    df: DataFrame,
-    num_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: str = "lsh",
-    dim: int | None = None,
-) -> DataFrame:
-    """Random-hyperplane LSH signature as a bit string.
-
-    The plane matrix depends only on (seed, plane, dim-index), so it is
-    materialized driver-side as array literals; each row pays only the
-    dot products (zip_with multiply + aggregate sum, JVM-side).  Sign
-    of the dot product gives bit p.
-    """
-    if dim is None:
-        dim = df.select(F.size(F.col(vec_col))).first()[0]
-    v = _as_double(vec_col)
-    bits = []
-    for p in range(num_planes):
-        plane = F.array(*[F.lit(_plane_component(seed, p, i)) for i in range(dim)])
-        dot = F.aggregate(
-            F.zip_with(v, plane, lambda x, c: x * c),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return df.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col),
-        F.concat(*bits).alias("bucket"),
-    )
-
-
 @lru_cache(maxsize=None)
 def _plane_matrix(num_planes: int, num_tables: int, dim: int) -> "np.ndarray":
     """dim × tables·planes hyperplane matrix from the md5 derivation —

@@ -218,11 +218,14 @@ def _ns_ts(epoch_ns):
 
 def _ns_frame(req: dict) -> pd.DataFrame:
     """A request's ``columns`` ColumnSeries map as pandas, its epoch-ns
-    ``ts_columns`` (default ``ts``; those present) as datetimes."""
+    ``ts_columns`` (default ``ts``; those present) as datetimes floored
+    to µs, Spark's timestamp precision: Arrow refuses to drop sub-µs
+    digits, so unfloored stamps push ``createDataFrame`` onto pyspark's
+    row fallback, which floors them the same way."""
     pdf = pd.DataFrame(req["columns"])
     for c in req.get("ts_columns", ["ts"]):
         if c in pdf.columns:
-            pdf[c] = pd.to_datetime(pdf[c], unit="ns")
+            pdf[c] = pd.to_datetime(pdf[c], unit="ns").dt.floor("us")
     return pdf
 
 

@@ -87,17 +87,6 @@ def stream_candles(
     )
 
 
-def multi_timeframe_rollup(
-    stream: DataFrame,
-    destinations: Sequence[str] = ("5Min", "15Min", "1H", "1D"),
-    **kwargs,
-) -> dict[str, DataFrame]:
-    """The ondiskagg `destinations:` config: one rollup stream per
-    target timeframe, all fed by the same source (Spark shares the
-    scan; each agg keeps its own bounded state)."""
-    return {tf: stream_candles(stream, tf, **kwargs) for tf in destinations}
-
-
 def stream_vwap(
     stream: DataFrame,
     timeframe: str,

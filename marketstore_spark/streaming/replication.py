@@ -57,16 +57,3 @@ def replicate_bucket(
     return append_sink(
         stream, dst, checkpoint_dir=ckpt, available_now=not continuous
     )
-
-
-def replicate_catalog(
-    master: Catalog,
-    replica: Catalog,
-    checkpoint_root: str | None = None,
-) -> dict[str, StreamingQuery]:
-    """Catch-up replication of every bucket (one independent stream
-    per bucket; failures isolate per key)."""
-    return {
-        key: replicate_bucket(master, replica, key, checkpoint_root)
-        for key in master.list_buckets()
-    }

@@ -14,7 +14,8 @@ triggers after the parquet commit (same durability guarantee as the
 reference: parquet file commits are atomic, so a trigger can re-read
 the bucket).  The ondiskagg trigger recomputes ONLY the touched coarse
 buckets — at 100 TB an append of one day re-aggregates one day, not
-the bucket's history.
+the bucket's history — and swaps them into each destination in one
+replace commit.
 """
 
 from __future__ import annotations
@@ -26,7 +27,13 @@ from typing import Protocol
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from marketstore_spark.operators.candler import candle_candles, tick_candles
+from marketstore_spark.catalog import TimeBucketKey
+from marketstore_spark.operators.candler import (
+    _CALENDAR,
+    _bucket,
+    candle_candles,
+    tick_candles,
+)
 
 
 class Trigger(Protocol):
@@ -67,8 +74,6 @@ def _touched_window(spark, bounds, dest_tf: str):
     calendar timeframes (1Mo/1Y) truncate on the calendar instead of
     raising.  Using plain F.window here (the round-1 bug) produced
     Thursday-aligned deletes that straddled real weekly buckets."""
-    from marketstore_spark.operators.candler import _CALENDAR, _bucket
-
     one = spark.range(1)
     # two selects: Spark allows only one window() per projection
     lo_b = one.select(_bucket(F.lit(bounds["lo"]), dest_tf).alias("w")).first()["w"]
@@ -96,13 +101,15 @@ class OnDiskAggTrigger:
 
     Incremental semantics match the reference (aggtrigger.go recomputes
     from the written indexes): the touched window is
-    [floor(min_ts, dest_tf), floor(max_ts, dest_tf) + dest_tf); the
-    destination rows in that window are deleted and recomputed from the
-    source bucket — idempotent, so replaying a write (WAL-recovery
-    analogue, or a Structured-Streaming retry) converges to the same
-    state.  Only the touched window is scanned: the source read is a
-    pushed-down ts range filter, so cost scales with the write size,
-    not bucket history.
+    [floor(min_ts, dest_tf), floor(max_ts, dest_tf) + dest_tf).  It is
+    recomputed from the source bucket and replaces the destination's
+    rows in that window in ONE commit per destination
+    (``Catalog._replace_where``, Delta's ``replaceWhere``): a reader
+    never sees the window empty, a crash leaves the previous rows, and
+    replaying a write (WAL-recovery analogue, or a Structured-Streaming
+    retry) converges to the same state.  Only the touched window of the
+    source is scanned (a pushed-down ts range filter); the destination
+    commit rewrites its kept rows alongside the recomputed window.
     """
 
     def __init__(self, catalog, destinations: list[str], ts_col: str = "ts"):
@@ -111,8 +118,6 @@ class OnDiskAggTrigger:
         self.ts_col = ts_col
 
     def fire(self, key: str, written: DataFrame) -> None:
-        from marketstore_spark.catalog import TimeBucketKey
-
         tbk = TimeBucketKey(key)
         bounds = written.agg(
             F.min(self.ts_col).alias("lo"), F.max(self.ts_col).alias("hi")
@@ -122,9 +127,10 @@ class OnDiskAggTrigger:
         for dest_tf in self.destinations:
             lo_v, hi_v = _touched_window(written.sparkSession, bounds, dest_tf)
 
-            src = self.catalog.read(key).filter(
-                (F.col(self.ts_col) >= F.lit(lo_v)) & (F.col(self.ts_col) < F.lit(hi_v))
-            )
+            def in_window(c):
+                return (F.col(c) >= F.lit(lo_v)) & (F.col(c) < F.lit(hi_v))
+
+            src = self.catalog.read(key).filter(in_window(self.ts_col))
             cols = set(src.columns)
             if {"open", "high", "low", "close"} <= cols:
                 out = candle_candles(
@@ -137,22 +143,9 @@ class OnDiskAggTrigger:
                     price_col="value" if "value" in cols else "close",
                     tiebreak=[c for c in ("event_id",) if c in cols],
                 )
-            dest_key = f"{tbk.symbol}/{dest_tf}/{tbk.attribute_group}"
-            dest_path = TimeBucketKey(dest_key).path(self.catalog.root)
-            import datetime
-            import os
-
-            if os.path.isdir(dest_path):
-                # delete-then-append upsert of the touched window only;
-                # delete_range is inclusive and the window end exclusive,
-                # so back off 1µs to spare the next bucket's row
-                self.catalog.delete_range(
-                    dest_key,
-                    lo_v,
-                    hi_v - datetime.timedelta(microseconds=1),
-                    ts_col="epoch",
-                )
-            self.catalog.write(dest_key, out)
+            self.catalog._replace_where(  # noqa: SLF001
+                f"{tbk.symbol}/{dest_tf}/{tbk.attribute_group}", in_window("epoch"), out
+            )
 
 
 def new_trigger(config: dict, catalog) -> OnDiskAggTrigger:

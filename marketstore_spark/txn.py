@@ -24,11 +24,12 @@ dependencies):
   swept by :func:`vacuum` — and never a partially-visible bucket.
 
 Append commits cost O(new files): the new manifest is old-list ∪ new
-files.  Replace commits (delete_range / compact) publish only the
-rewritten set; superseded data files linger until ``vacuum``, so a
-concurrent reader that already planned version ``n`` keeps a complete
-snapshot (snapshot isolation, and time travel for free via
-``version=``).
+files.  Replace commits (compact, and ``Catalog._replace_where`` behind
+delete_range and the ondiskagg upsert, which drops a predicate's rows
+and unions in new ones in one commit) publish only the rewritten set;
+superseded data files linger until ``vacuum``, so a concurrent reader
+that already planned version ``n`` keeps a complete snapshot (snapshot
+isolation, and time travel for free via ``version=``).
 
 At 100 TB this is exactly the production shape: executors write data
 files in parallel with no renames of data (object-store friendly), and
@@ -54,7 +55,6 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 MANIFEST_DIR = "_manifests"
@@ -345,12 +345,16 @@ def read_bucket(
 ) -> DataFrame:
     """Plan a scan of the bucket's committed snapshot.  An explicit
     file list goes to the reader (not the directory), so half-staged
-    data files are structurally invisible.
+    data files are structurally invisible, and the manifest's schema
+    goes with it, so planning opens no parquet footer and starts no
+    Spark job (appends must match that schema exactly, see
+    :func:`_check_schema_compatible`).
 
     Partitioned snapshots set ``basePath`` so the hive ``col=value``
-    chains under ``data/`` come back as partition columns — filters on
-    them prune files at PLANNING time exactly as a directory scan
-    would, but against the committed file list."""
+    chains under ``data/`` come back as partition columns, typed by the
+    committed schema (a string value like ``'007'`` stays a string) —
+    filters on them prune files at PLANNING time exactly as a directory
+    scan would, but against the committed file list."""
     if not is_versioned(bucket):
         return spark.read.parquet(bucket)  # legacy flat layout
     if version is None:
@@ -360,23 +364,12 @@ def read_bucket(
     schema = StructType.fromJson(json.loads(m["schema"])) if m["schema"] else None
     if not files:
         return spark.createDataFrame([], schema)
-    pby = m.get("partition_by") or []
-    if not pby:
-        return spark.read.parquet(*files)
-    df = (
-        spark.read.option("basePath", os.path.join(bucket, DATA_DIR))
-        .parquet(*files)
-    )
-    if schema is not None:
-        # Partition values round-trip through directory names; re-cast
-        # any column whose inferred type drifted (e.g. '42' → int when
-        # the table column is long), then restore the committed order.
-        by_name = {f.name: f.dataType for f in schema.fields}
-        for c in pby:
-            if c in by_name and df.schema[c].dataType != by_name[c]:
-                df = df.withColumn(c, F.col(c).cast(by_name[c]))
-        df = df.select(*[f.name for f in schema.fields])
-    return df
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if not m.get("partition_by"):
+        return reader.parquet(*files)
+    df = reader.option("basePath", os.path.join(bucket, DATA_DIR)).parquet(*files)
+    # an explicit schema puts partition columns last: restore the committed order
+    return df if schema is None else df.select(*schema.fieldNames())
 
 
 def vacuum(

@@ -429,3 +429,34 @@ def test_http_client_write_create_info_destroy(rpc):
     assert "WIRE" in c.list_symbols()
     c.destroy(tbk)
     assert "WIRE" not in c.list_symbols()
+
+
+def test_write_floors_ns_stamps_to_us_on_the_arrow_path(spark, tmp_path):
+    """RPC Write stamps are epoch-ns; Spark keeps µs.  They are stored
+    floored to µs (what pyspark's row fallback stored, pre-1970 stamps
+    included), and the frame takes the Arrow path with no fallback
+    warning."""
+    import warnings
+
+    from marketstore_spark.server import DataService
+
+    cat = Catalog(spark, str(tmp_path))
+    stamps = [
+        1_704_067_200_123_456_789,  # sub-µs digits
+        1_704_067_200_000_000_999,
+        -1,  # 1969-12-31T23:59:59.999999999
+        -1_500,
+        -86_400_000_000_001,
+        0,
+    ]
+    req = {
+        "key": "NS/1Sec/TICK",
+        "data": {"columns": {"ts": stamps, "value": [float(i) for i in range(6)]}},
+    }
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        DataService(cat).Write({"requests": [req]})
+    assert not [w for w in caught if "Arrow optimization" in str(w.message)]
+    got = cat.read("NS/1Sec/TICK").select(F.unix_micros("ts").alias("us"), "value")
+    stored = {r["value"]: r["us"] for r in got.collect()}
+    assert stored == {float(i): ns // 1000 for i, ns in enumerate(stamps)}

@@ -108,3 +108,81 @@ def test_ondiskagg_weekly_and_monthly_alignment(spark, sf_dir, tmp_path):
 
     for epoch in {r["epoch"] for r in cat.read("SYM1/1W/TICK").collect()}:
         assert epoch.weekday() == 0, epoch
+
+
+def _rollup_setup(spark, sf_dir, tmp_path, destinations):
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") == 1)
+    cat = Catalog(spark, os.path.join(str(tmp_path), "root"))
+    reg = TriggerRegistry()
+    reg.register("*/1Min/TICK", OnDiskAggTrigger(cat, destinations=destinations))
+    cat.triggers = reg
+    return ev, cat
+
+
+def _ohlc(df):
+    return {r["epoch"]: (r["open"], r["high"], r["low"], r["close"]) for r in df.collect()}
+
+
+def test_rollup_advances_one_version_per_write(spark, sf_dir, tmp_path):
+    """The upsert of the touched window is ONE replace commit per
+    destination: each source write advances every rollup by exactly
+    one manifest version (no delete-then-append pair)."""
+    from marketstore_spark import txn
+    from marketstore_spark.catalog import TimeBucketKey
+
+    ev, cat = _rollup_setup(spark, sf_dir, tmp_path, ["1H", "1D"])
+    paths = {tf: TimeBucketKey(f"SYM1/{tf}/TICK").path(cat.root) for tf in ("1H", "1D")}
+    cat.write("SYM1/1Min/TICK", ev.filter(F.col("ts") < "2024-01-05"))
+    assert {tf: txn.current_version(p) for tf, p in paths.items()} == {"1H": 0, "1D": 0}
+    cat.write("SYM1/1Min/TICK", ev.filter(F.col("ts") >= "2024-01-04"))
+    assert {tf: txn.current_version(p) for tf, p in paths.items()} == {"1H": 1, "1D": 1}
+    for tf in ("1H", "1D"):
+        assert _ohlc(cat.read(f"SYM1/{tf}/TICK")) == _ohlc(
+            tick_candles(cat.read("SYM1/1Min/TICK"), tf, key_cols=(), ts_col="ts")
+        )
+
+
+def test_failed_rollup_staging_keeps_previous_window_rows(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A failure while the rollup stages its recomputed window (here:
+    the recomputed rows raise when the staging job evaluates them)
+    must leave the destination's previous rows for that window
+    readable — there is no commit between dropping them and adding the
+    new ones."""
+    import pytest
+
+    from marketstore_spark import triggers
+
+    ev, cat = _rollup_setup(spark, sf_dir, tmp_path, ["1H"])
+    cat.write("SYM1/1Min/TICK", ev.filter(F.col("ts") < "2024-01-05"))
+    before = _ohlc(cat.read("SYM1/1H/TICK"))
+    assert before
+
+    real = triggers.tick_candles
+
+    def failing(*args, **kwargs):
+        out = real(*args, **kwargs)
+        return out.withColumn("close", F.raise_error(F.lit("injected")).cast("double"))
+
+    monkeypatch.setattr(triggers, "tick_candles", failing)
+    with pytest.raises(Exception, match="injected"):
+        cat.write("SYM1/1Min/TICK", ev.filter(F.col("ts") >= "2024-01-04"))
+    assert _ohlc(cat.read("SYM1/1H/TICK")) == before
+
+
+def test_rollup_commit_fires_destination_triggers(spark, sf_dir, tmp_path):
+    """A rollup's commit fires the triggers registered on its own key,
+    as Catalog.write does, so a 1Min → 5Min → 1H cascade stays equal
+    to candles computed straight from the ticks."""
+    ev, cat = _rollup_setup(spark, sf_dir, tmp_path, ["5Min"])
+    cat.triggers.register(
+        "*/5Min/TICK", OnDiskAggTrigger(cat, destinations=["1H"], ts_col="epoch")
+    )
+    cat.write("SYM1/1Min/TICK", ev.filter(F.col("ts") < "2024-01-05"))
+    cat.write("SYM1/1Min/TICK", ev.filter(F.col("ts") >= "2024-01-04"))
+    ticks = cat.read("SYM1/1Min/TICK")
+    for tf in ("5Min", "1H"):
+        assert _ohlc(cat.read(f"SYM1/{tf}/TICK")) == _ohlc(
+            tick_candles(ticks, tf, key_cols=(), ts_col="ts")
+        ), tf

@@ -410,3 +410,46 @@ def test_tpch_refresh_stream_scenario(spark, tmp_path, sf_dir):
     # time travel reproduces both historical states exactly
     assert total(txn.read_bucket(spark, path, version=0)) == v0_total
     assert total(txn.read_bucket(spark, path, version=1)) == total(li)
+
+
+def test_string_partition_values_read_back_unchanged(spark, tmp_path):
+    """Partition values round-trip through directory names; the
+    committed schema types them, so a string column whose values look
+    like numbers ('007', '042', '1e3') reads back unchanged and filters
+    on its exact value."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "codes")
+    df = spark.createDataFrame(
+        [Row(ts=i, code=c, value=float(i)) for i, c in enumerate(["007", "042", "1e3"])]
+    )
+    txn.commit_write(df, root, partition_by=("code",))
+    got = txn.read_bucket(spark, root)
+    assert got.columns == ["ts", "code", "value"]  # committed column order
+    assert dict(got.dtypes)["code"] == "string"
+    assert sorted(r["code"] for r in got.collect()) == ["007", "042", "1e3"]
+    assert [r["ts"] for r in got.filter(F.col("code") == "007").collect()] == [0]
+
+
+def test_planning_a_read_starts_no_spark_job(cat, spark):
+    """A versioned bucket's read is planned from the manifest (file
+    list and schema), so planning it opens no footer and starts no
+    Spark job; the same job group does see the jobs of running it."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    cat.write(KEY, _mkdf(spark, 10))
+    cat.write(KEY, _mkdf(spark, 5, base=100))
+    sc = spark.sparkContext
+    group = f"plan-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan a bucket read")
+    try:
+        df = cat.read(KEY).filter(F.col("ts") > 3)
+        assert df.columns == ["ts", "user_id", "value"]
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert df.count() == 7  # ts 4..9 of the first write, ts 4 of the second
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
