@@ -3,6 +3,7 @@ contrib/ondiskagg/aggtrigger.go, cmd/tool/integrity)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from marketstore_spark.catalog import Catalog, load_table
@@ -150,8 +151,6 @@ def test_failed_rollup_staging_keeps_previous_window_rows(
     must leave the destination's previous rows for that window
     readable — there is no commit between dropping them and adding the
     new ones."""
-    import pytest
-
     from marketstore_spark import triggers
 
     ev, cat = _rollup_setup(spark, sf_dir, tmp_path, ["1H"])
