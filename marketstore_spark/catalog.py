@@ -348,14 +348,14 @@ class Catalog:
         """
         path = TimeBucketKey(key).path(self.root)
         base = txn.current_version(path)
-        files_before = len(txn.data_files(path, version=base))
-        df = self.read(key, version=base)
-        size_b = sum(os.path.getsize(f) for f in txn.data_files(path, version=base))
+        files = txn.data_files(path, version=base)
+        size_b = sum(os.path.getsize(f) for f in files)
         nfiles = max(1, round(size_b / (target_file_mb * 1024 * 1024)))
-        txn.commit_write(df.repartition(nfiles), path, mode="replace", base_version=base)
+        df = self.read(key, version=base).repartition(nfiles)
+        txn.commit_write(df, path, mode="replace", base_version=base)
         rows = self.read(key).count()
         files_after = len(txn.data_files(path))
-        return {"files_before": files_before, "files_after": files_after, "rows": rows}
+        return {"files_before": len(files), "files_after": files_after, "rows": rows}
 
     def vacuum(
         self,

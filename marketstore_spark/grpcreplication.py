@@ -31,9 +31,9 @@ durable state rather than new protocol machinery:
   Proto3 unknown-field rules keep the extension wire-compatible both
   ways.
 * **Exactly-once replay** — versions are published on the replica with
-  the same ``os.link`` compare-and-swap txn.py uses, so a re-delivered
-  commit is a no-op (``FileExistsError`` → already replayed), never a
-  duplicate.
+  txn.py's own ``os.link`` compare-and-swap (``txn.link_manifest``), so
+  a re-delivered commit is a no-op (the version exists → already
+  replayed), never a duplicate.
 
 Scale posture: replication is a *metadata + new-file* copy — each
 record moves one manifest and only the files that commit added, so a
@@ -250,28 +250,6 @@ def serve_replication_background(
 # ---------------------------------------------------------------------
 
 
-def _publish_exact(bucket: str, version: int, manifest_json: str) -> bool:
-    """Publish ``manifest_json`` at exactly ``version`` with the same
-    fsync + ``os.link`` CAS txn.publish uses.  Returns False when that
-    version already exists — the exactly-once guard for re-delivered
-    records."""
-    mdir = os.path.join(bucket, txn.MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-    with open(tmp, "w") as fh:
-        fh.write(manifest_json)
-        fh.flush()
-        os.fsync(fh.fileno())
-    final = os.path.join(mdir, f"{version:012d}.json")
-    try:
-        os.link(tmp, final)
-        os.unlink(tmp)
-        return True
-    except FileExistsError:
-        os.unlink(tmp)
-        return False
-
-
 def replay_transaction_group(replica_root: str, tg: dict) -> bool:
     """Apply one WAL record to the replica catalog (replay.go twin).
 
@@ -305,7 +283,7 @@ def replay_transaction_group(replica_root: str, tg: dict) -> bool:
             fh.flush()
             os.fsync(fh.fileno())
         os.replace(tmp, path)
-    return _publish_exact(bucket, version, tg["manifest_json"])
+    return txn.link_manifest(bucket, version, tg["manifest_json"])
 
 
 def replica_cursors(replica_root: str) -> dict[str, int]:

@@ -67,11 +67,18 @@ def _bucket(ts_col: str | Column, tf: str, tz: str | None = None) -> Column:
     Weekly buckets are Monday-aligned like the reference (Go's
     ``time.Truncate`` counts from the zero time, a Monday; Spark's
     window origin 1970-01-01 is a Thursday, hence the 4-day
-    ``startTime`` shift).  ``1Mo``/``1Y`` truncate on the calendar."""
+    ``startTime`` shift).  ``1Mo``/``1Y`` truncate on the calendar.
+    Every timeframe yields a ``(start, end)`` struct, the bucket being
+    ``[start, end)``; a calendar bucket ends one month or year after
+    its start."""
     ts = F.col(ts_col) if isinstance(ts_col, str) else ts_col
     base = ts if tz is None else F.from_utc_timestamp(ts.cast("timestamp"), tz)
     if tf in _CALENDAR:
-        return F.struct(F.date_trunc(_CALENDAR[tf], base).alias("start"))
+        unit = _CALENDAR[tf]
+        start = F.date_trunc(unit, base)
+        return F.struct(
+            start.alias("start"), (start + F.expr(f"INTERVAL 1 {unit}")).alias("end")
+        )
     dur = timeframe_to_duration(tf)
     if dur == "7 days":
         return F.window(base, dur, startTime="4 days")

@@ -21,8 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from marketstore_spark.functions.timeutil import ord_key_ts, with_instant_ts
-from marketstore_spark.operators.candler import _CALENDAR, _bucket
+from marketstore_spark.functions.timeutil import with_instant_ts
+from marketstore_spark.operators.candler import _CALENDAR, _bucket, _ordkey
 
 
 def _stream_bucket(ts_col: str, timeframe: str):
@@ -58,11 +58,7 @@ def stream_candles(
     primitive-typed (candler._ordkey's HashAggregate rationale).
     """
     stream = with_instant_ts(stream, ts_col)  # watermark needs instant ts
-    ok = (
-        ord_key_ts(F.col(ts_col), F.col(tiebreak[0]))
-        if len(tiebreak) == 1
-        else F.struct(F.col(ts_col), *[F.col(c) for c in tiebreak])
-    )
+    ok = _ordkey(ts_col, tiebreak)
     agg = (
         stream.withWatermark(ts_col, watermark)
         .groupBy(*key_cols, _stream_bucket(ts_col, timeframe).alias("__w"))
@@ -144,11 +140,7 @@ def stream_range_vol(
     stream = with_instant_ts(stream, ts_col)
     cents = (F.col(price_col).cast("decimal(8,2)") * 100).cast("long")
     staged = stream.withColumn("__px_c", cents)
-    ok = (
-        ord_key_ts(F.col(ts_col), F.col(tiebreak[0]))
-        if len(tiebreak) == 1
-        else F.struct(F.col(ts_col), *[F.col(c) for c in tiebreak])
-    )
+    ok = _ordkey(ts_col, tiebreak)
     agg = (
         staged.withWatermark(ts_col, watermark)
         .groupBy(*key_cols, _stream_bucket(ts_col, timeframe).alias("__w"))

@@ -14,6 +14,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from marketstore_spark import txn
+from marketstore_spark.catalog import TimeBucketKey
+
 
 def read_stream(
     spark: SparkSession,
@@ -45,15 +48,14 @@ def backfill(catalog, key: str, source: DataFrame, ts_col: str = "ts") -> int:
     never rewrite what's already on disk.  Idempotence comes from the
     high-water mark, so a crashed backfill re-run appends nothing
     twice; the only driver-side value is the one-row MAX(ts) probe.
-    Returns the number of rows appended."""
+    A bucket with no data file takes the whole source; a bucket that
+    cannot be read raises.  Returns the number of rows appended."""
     from pyspark.sql import functions as F
 
     new = source
-    try:
-        existing = catalog.read(key)
-        hi = existing.agg(F.max(ts_col).alias("hi")).first()["hi"]
-    except Exception:  # noqa: BLE001 — bucket absent: full backfill
-        hi = None
+    hi = None
+    if txn.data_files(TimeBucketKey(key).path(catalog.root)):
+        hi = catalog.read(key).agg(F.max(ts_col).alias("hi")).first()["hi"]
     if hi is not None:
         new = source.filter(F.col(ts_col) > F.lit(hi))
     n = new.count()

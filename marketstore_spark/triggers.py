@@ -28,12 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from marketstore_spark.catalog import TimeBucketKey
-from marketstore_spark.operators.candler import (
-    _CALENDAR,
-    _bucket,
-    candle_candles,
-    tick_candles,
-)
+from marketstore_spark.operators.candler import _bucket, candle_candles, tick_candles
 
 
 class Trigger(Protocol):
@@ -67,33 +62,6 @@ class TriggerRegistry:
                 m.trigger.fire(key, written)
 
 
-def _touched_window(spark, bounds, dest_tf: str):
-    """[bucket_start(lo), bucket_end(hi)) in the DESTINATION timeframe,
-    derived from the same bucketing the candler aggregates with — so a
-    1W destination is Monday-aligned (4-day startTime shift) and
-    calendar timeframes (1Mo/1Y) truncate on the calendar instead of
-    raising.  Using plain F.window here (the round-1 bug) produced
-    Thursday-aligned deletes that straddled real weekly buckets."""
-    one = spark.range(1)
-    # two selects: Spark allows only one window() per projection
-    lo_b = one.select(_bucket(F.lit(bounds["lo"]), dest_tf).alias("w")).first()["w"]
-    hi_b = one.select(_bucket(F.lit(bounds["hi"]), dest_tf).alias("w")).first()["w"]
-    lo_v = lo_b["start"]
-    if dest_tf in _CALENDAR:
-        s = hi_b["start"]
-        if _CALENDAR[dest_tf] == "month":
-            hi_v = (
-                s.replace(year=s.year + 1, month=1)
-                if s.month == 12
-                else s.replace(month=s.month + 1)
-            )
-        else:
-            hi_v = s.replace(year=s.year + 1)
-    else:
-        hi_v = hi_b["end"]
-    return lo_v, hi_v
-
-
 class OnDiskAggTrigger:
     """contrib/ondiskagg/aggtrigger re-expressed: on write to a fine
     bucket, re-aggregate the affected epoch window into each
@@ -101,15 +69,17 @@ class OnDiskAggTrigger:
 
     Incremental semantics match the reference (aggtrigger.go recomputes
     from the written indexes): the touched window is
-    [floor(min_ts, dest_tf), floor(max_ts, dest_tf) + dest_tf).  It is
-    recomputed from the source bucket and replaces the destination's
-    rows in that window in ONE commit per destination
-    (``Catalog._replace_where``, Delta's ``replaceWhere``): a reader
-    never sees the window empty, a crash leaves the previous rows, and
-    replaying a write (WAL-recovery analogue, or a Structured-Streaming
-    retry) converges to the same state.  Only the touched window of the
-    source is scanned (a pushed-down ts range filter); the destination
-    commit rewrites its kept rows alongside the recomputed window.
+    [floor(min_ts, dest_tf), floor(max_ts, dest_tf) + dest_tf) in the
+    candler's own bucketing (``_bucket``), found for every destination
+    by one aggregate over the written rows.  It is recomputed from the
+    source bucket and replaces the destination's rows in that window in
+    ONE commit per destination (``Catalog._replace_where``, Delta's
+    ``replaceWhere``): a reader never sees the window empty, a crash
+    leaves the previous rows, and replaying a write (WAL-recovery
+    analogue, or a Structured-Streaming retry) converges to the same
+    state.  The source's ts filter skips no file: ts is written as
+    INT96, whose footers carry no min/max and which Spark's parquet
+    pushdown ignores, so the whole source is read.
     """
 
     def __init__(self, catalog, destinations: list[str], ts_col: str = "ts"):
@@ -119,13 +89,21 @@ class OnDiskAggTrigger:
 
     def fire(self, key: str, written: DataFrame) -> None:
         tbk = TimeBucketKey(key)
-        bounds = written.agg(
-            F.min(self.ts_col).alias("lo"), F.max(self.ts_col).alias("hi")
+        # one select per destination: Spark allows one window() per projection
+        buckets = written.select(self.ts_col)
+        for i, dest_tf in enumerate(self.destinations):
+            buckets = buckets.select("*", _bucket(self.ts_col, dest_tf).alias(f"w{i}"))
+        bounds = buckets.agg(
+            *[
+                agg(f"w{i}.{edge}")
+                for i in range(len(self.destinations))
+                for agg, edge in ((F.min, "start"), (F.max, "end"))
+            ]
         ).first()
-        if bounds["lo"] is None:
+        if bounds[0] is None:
             return
-        for dest_tf in self.destinations:
-            lo_v, hi_v = _touched_window(written.sparkSession, bounds, dest_tf)
+        for i, dest_tf in enumerate(self.destinations):
+            lo_v, hi_v = bounds[2 * i], bounds[2 * i + 1]
 
             def in_window(c):
                 return (F.col(c) >= F.lit(lo_v)) & (F.col(c) < F.lit(hi_v))

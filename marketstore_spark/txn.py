@@ -13,12 +13,14 @@ dependencies):
   a data file is INVISIBLE until some manifest references it, so Spark
   jobs can write them without coordination.
 - Each commit produces ``<bucket>/_manifests/<n>.json`` holding the
-  exact relative file list (and schema) of version ``n``.  The JSON is
-  staged to a temp name, fsync'd, then published with ``os.link`` —
-  atomic, and it FAILS with EEXIST if another writer claimed version
-  ``n`` first.  That failure is the optimistic-concurrency retry point
-  (Iceberg's compare-and-swap on the table pointer): re-read the
-  current version, rebuild the file set, try ``n+1``.
+  exact relative file list, schema and ``partition_by`` of version
+  ``n``.  The JSON is staged to a temp name, fsync'd, then published
+  with ``os.link`` (:func:`link_manifest`) — atomic, and it FAILS with
+  EEXIST if another writer claimed version ``n`` first.  That failure
+  is the optimistic-concurrency retry point (Iceberg's compare-and-swap
+  on the table pointer): re-read the current version, rebuild the file
+  set, try ``n+1``.  A commit that names no ``partition_by`` keeps the
+  current manifest's, so only ``write_bucket_store`` chooses a layout.
 - The current version is simply the highest manifest present.  A crash
   at ANY earlier point leaves orphan data files / temp manifests —
   swept by :func:`vacuum` — and never a partially-visible bucket.
@@ -233,13 +235,36 @@ def _merge_replace_files(
     return list(new_files) + sorted(cur_files - base_files)
 
 
+def link_manifest(bucket: str, version: int, payload: str, crash_hook=None) -> bool:
+    """The compare-and-swap: write ``payload`` to a temp name, fsync it,
+    then ``os.link`` it to version ``version``'s manifest name, which
+    is atomic and fails if that version exists.  Returns False when it
+    does (another writer, or an earlier delivery, claimed it)."""
+    mdir = _manifest_dir(bucket)
+    os.makedirs(mdir, exist_ok=True)
+    tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
+    with open(tmp, "w") as fh:
+        fh.write(payload)
+        fh.flush()
+        os.fsync(fh.fileno())
+    if crash_hook is not None:
+        crash_hook("pre_publish")
+    try:
+        os.link(tmp, os.path.join(mdir, f"{version:012d}.json"))
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
 def publish(
     bucket: str,
     new_files: list[str],
     schema_json: str,
     mode: str = "append",
     crash_hook=None,
-    base_version=_UNSET,
+    base_version: int | None = None,
     partition_by: tuple[str, ...] | None = None,
 ) -> int:
     """Atomically publish a new version.  ``mode='append'`` unions the
@@ -247,20 +272,16 @@ def publish(
     ``new_files`` the entire bucket.  Returns the published version.
 
     ``base_version`` (replace mode) is the version the replacement was
-    computed FROM.  If the bucket advanced past it — a lost CAS or a
-    slow writer — concurrent pure appends are merged into the new
-    manifest and anything else raises :class:`CommitConflictError`;
-    silently publishing only ``new_files`` would drop the concurrently
-    appended rows (the classic lost update).  When the caller doesn't
-    pass it, the version observed on the FIRST loop iteration is the
-    base, so a lost CAS retry still gets conflict detection.
+    computed FROM (None: the bucket had no version).  If the bucket
+    advanced past it — a lost CAS or a slow writer — concurrent pure
+    appends are merged into the new manifest and anything else raises
+    :class:`CommitConflictError`; silently publishing only
+    ``new_files`` would drop the concurrently appended rows (the
+    classic lost update).
 
     ``crash_hook(point)`` is a fault-injection seam for the crash tests
     (points: 'pre_publish') — production callers leave it None.
     """
-    mdir = _manifest_dir(bucket)
-    os.makedirs(mdir, exist_ok=True)
-    first_iteration = True
     while True:
         cur = current_version(bucket)
         if mode == "append":
@@ -276,14 +297,10 @@ def publish(
                 schema_json = schema_json or base["schema"]
             else:  # first commit over a legacy flat bucket adopts its files
                 files = _legacy_relative_files(bucket) + list(new_files)
+        elif cur != base_version:
+            files = _merge_replace_files(bucket, base_version, cur, new_files)
         else:
-            if base_version is _UNSET and first_iteration:
-                base_version = cur  # caller gave no snapshot: adopt first-seen
-            if base_version is not _UNSET and cur != base_version:
-                files = _merge_replace_files(bucket, base_version, cur, new_files)
-            else:
-                files = list(new_files)
-        first_iteration = False
+            files = list(new_files)
         nxt = 0 if cur is None else cur + 1
         payload = json.dumps(
             {
@@ -293,20 +310,8 @@ def publish(
                 "partition_by": list(partition_by or ()),
             }
         )
-        tmp = os.path.join(mdir, f".tmp-{uuid.uuid4().hex[:12]}")
-        with open(tmp, "w") as fh:
-            fh.write(payload)
-            fh.flush()
-            os.fsync(fh.fileno())
-        if crash_hook is not None:
-            crash_hook("pre_publish")
-        final = os.path.join(mdir, f"{nxt:012d}.json")
-        try:
-            os.link(tmp, final)  # atomic + exclusive: the CAS
-            os.unlink(tmp)
+        if link_manifest(bucket, nxt, payload, crash_hook):
             return nxt
-        except FileExistsError:  # lost the race: retry on fresh state
-            os.unlink(tmp)
 
 
 def commit_write(
@@ -321,13 +326,17 @@ def commit_write(
 
     Replace callers that computed ``df`` from an earlier snapshot should
     pass that snapshot's version as ``base_version`` so concurrent
-    appends are detected (merged) rather than silently dropped."""
+    appends are detected (merged) rather than silently dropped.  No
+    ``partition_by`` keeps the current manifest's layout."""
     os.makedirs(bucket, exist_ok=True)
+    cur = current_version(bucket)
     if base_version is _UNSET and mode == "replace":
         # The caller's df was planned from the bucket no later than now;
         # capture the snapshot before staging (which can take minutes on
         # a big rewrite — plenty of time for a concurrent append).
-        base_version = current_version(bucket)
+        base_version = cur
+    if partition_by is None and cur is not None:
+        partition_by = tuple(read_manifest(bucket, cur).get("partition_by") or ())
     rels, schema_json = stage_files(df, bucket, partition_by=partition_by)
     return publish(
         bucket,

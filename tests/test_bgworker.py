@@ -145,6 +145,32 @@ def test_backfill_high_water_mark(spark, tmpdir):
     assert cat.read("BF/1Min/TICK").count() == 80
 
 
+def test_backfill_raises_when_the_bucket_cannot_be_read(spark, tmpdir):
+    """Only a bucket with no data file is absent: a committed data file
+    that cannot be read fails the backfill instead of reading as an
+    empty bucket and appending the whole source a second time."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import Row
+
+    from marketstore_spark import txn
+    from marketstore_spark.catalog import Catalog, TimeBucketKey
+    from marketstore_spark.streaming.writer import backfill
+
+    cat = Catalog(spark, os.path.join(str(tmpdir), "root"))
+    key = "BF/1Min/TICK"
+    src = spark.createDataFrame(
+        [Row(ts=i, user_id=i % 2, value=float(i)) for i in range(50)]
+    )
+    assert backfill(cat, key, src) == 50
+    path = TimeBucketKey(key).path(cat.root)
+    for f in txn.data_files(path):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        backfill(cat, key, src)
+    assert txn.current_version(path) == 0
+
+
 def test_streaming_query_mounts_as_worker(spark, tmpdir):
     """A real Structured Streaming job (rate source -> noop-ish sink)
     runs under the host and stops cooperatively."""

@@ -84,7 +84,7 @@ def test_ondiskagg_weekly_and_monthly_alignment(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") == 1)
     cat = Catalog(spark, os.path.join(str(tmp_path), "root"))
     reg = TriggerRegistry()
-    reg.register("*/1Min/TICK", OnDiskAggTrigger(cat, destinations=["1W", "1Mo"]))
+    reg.register("*/1Min/TICK", OnDiskAggTrigger(cat, destinations=["1W", "1Mo", "1Y"]))
     cat.triggers = reg
 
     first = ev.filter(F.col("ts") < "2024-01-10")
@@ -92,7 +92,7 @@ def test_ondiskagg_weekly_and_monthly_alignment(spark, sf_dir, tmp_path):
     cat.write("SYM1/1Min/TICK", first)
     cat.write("SYM1/1Min/TICK", rest)
 
-    for tf in ("1W", "1Mo"):
+    for tf in ("1W", "1Mo", "1Y"):
         got = {
             r["epoch"]: (r["open"], r["high"], r["low"], r["close"])
             for r in cat.read(f"SYM1/{tf}/TICK").collect()
@@ -185,3 +185,116 @@ def test_rollup_commit_fires_destination_triggers(spark, sf_dir, tmp_path):
         assert _ohlc(cat.read(f"SYM1/{tf}/TICK")) == _ohlc(
             tick_candles(ticks, tf, key_cols=(), ts_col="ts")
         ), tf
+
+
+def test_bucket_ends_for_every_timeframe(spark):
+    """``_bucket`` gives every timeframe a ``[start, end)`` struct: a
+    pre-1970 stamp and a leap day land in the right fixed, Monday
+    weekly, calendar month and calendar year buckets."""
+    import datetime as dt
+
+    from pyspark.sql import Row
+
+    from marketstore_spark.operators.candler import _bucket
+
+    cases = {
+        dt.datetime(1969, 12, 31, 23, 59, 30): {
+            "1Min": (dt.datetime(1969, 12, 31, 23, 59), dt.datetime(1970, 1, 1)),
+            "1D": (dt.datetime(1969, 12, 31), dt.datetime(1970, 1, 1)),
+            "1W": (dt.datetime(1969, 12, 29), dt.datetime(1970, 1, 5)),
+            "1Mo": (dt.datetime(1969, 12, 1), dt.datetime(1970, 1, 1)),
+            "1Y": (dt.datetime(1969, 1, 1), dt.datetime(1970, 1, 1)),
+        },
+        dt.datetime(2024, 2, 29, 12): {
+            "1Min": (dt.datetime(2024, 2, 29, 12), dt.datetime(2024, 2, 29, 12, 1)),
+            "1D": (dt.datetime(2024, 2, 29), dt.datetime(2024, 3, 1)),
+            "1W": (dt.datetime(2024, 2, 26), dt.datetime(2024, 3, 4)),
+            "1Mo": (dt.datetime(2024, 2, 1), dt.datetime(2024, 3, 1)),
+            "1Y": (dt.datetime(2024, 1, 1), dt.datetime(2025, 1, 1)),
+        },
+    }
+    df = spark.createDataFrame([Row(ts=ts) for ts in cases])
+    for tf in ("1Min", "1D", "1W", "1Mo", "1Y"):
+        got = {
+            r["ts"]: (r["w"]["start"], r["w"]["end"])
+            for r in df.select("ts", _bucket("ts", tf).alias("w")).collect()
+        }
+        assert got == {ts: want[tf] for ts, want in cases.items()}, tf
+
+
+def test_fire_finds_every_window_in_one_aggregate(
+    spark, sf_dir, tmp_path, monkeypatch, job_group
+):
+    """The touched windows of all destinations come from one aggregate
+    over the written rows, so a write that feeds three rollups starts
+    no more Spark jobs before the commits than one that feeds one."""
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") == 1)
+    cat = Catalog(spark, os.path.join(str(tmp_path), "root"))
+    cat.write("SYM1/1Min/TICK", ev)
+    committed = []
+    monkeypatch.setattr(
+        Catalog, "_replace_where", lambda self, key, drop, new=None: committed.append(key)
+    )
+    counts = {}
+    for dests in (["1H"], ["1Min", "1W", "1Mo"]):
+        with job_group() as jobs:
+            OnDiskAggTrigger(cat, dests).fire("SYM1/1Min/TICK", ev)
+            counts[len(dests)] = len(jobs())
+    assert committed == ["SYM1/1H/TICK", "SYM1/1Min/TICK", "SYM1/1W/TICK", "SYM1/1Mo/TICK"]
+    assert counts[3] == counts[1], counts
+
+
+def test_reader_never_sees_a_touched_rollup_bucket_missing(spark, tmp_path):
+    """A thread polls the 1Min rollup while overlapping writes stream
+    into the tick bucket: every minute a poll has seen stays visible
+    in each later poll, and the visible minutes never have a gap."""
+    import datetime as dt
+    import threading
+
+    from pyspark.sql import Row
+
+    cat = Catalog(spark, os.path.join(str(tmp_path), "root"))
+    reg = TriggerRegistry()
+    reg.register("*/1Sec/TICK", OnDiskAggTrigger(cat, destinations=["1Min"]))
+    cat.triggers = reg
+    t0 = dt.datetime(2024, 1, 2, 9, 30)
+
+    def write(k):  # minutes [2k, 2k + 4): half of each window was written before
+        rows = [
+            Row(ts=t0 + dt.timedelta(seconds=s), event_id=k * 1000 + s, value=float(s % 97))
+            for s in range(120 * k, 120 * k + 240, 7)
+        ]
+        cat.write("SYM1/1Sec/TICK", spark.createDataFrame(rows))
+
+    write(0)
+    stop, polls, errors = threading.Event(), [], []
+
+    def poll():
+        seen = set()
+        try:
+            while not stop.is_set():
+                got = {r["epoch"] for r in cat.read("SYM1/1Min/TICK").select("epoch").collect()}
+                assert seen <= got, sorted(seen - got)
+                minutes = sorted(int((e - t0).total_seconds()) // 60 for e in got)
+                assert minutes == list(range(len(minutes))), minutes
+                seen = got
+                polls.append(len(got))
+        except Exception as exc:  # noqa: BLE001 — re-raised on the test thread
+            errors.append(exc)
+
+    reader = threading.Thread(target=poll)
+    reader.start()
+    try:
+        for k in range(1, 7):
+            write(k)
+    finally:
+        stop.set()
+        reader.join(timeout=120)
+    assert not reader.is_alive()
+    assert not errors, errors[0]
+    assert len(polls) >= 2
+    final = _ohlc(cat.read("SYM1/1Min/TICK"))
+    assert len(final) == 16
+    assert final == _ohlc(
+        tick_candles(cat.read("SYM1/1Sec/TICK"), "1Min", key_cols=(), ts_col="ts")
+    )

@@ -431,25 +431,70 @@ def test_string_partition_values_read_back_unchanged(spark, tmp_path):
     assert [r["ts"] for r in got.filter(F.col("code") == "007").collect()] == [0]
 
 
-def test_planning_a_read_starts_no_spark_job(cat, spark):
+def test_planning_a_read_starts_no_spark_job(cat, spark, job_group):
     """A versioned bucket's read is planned from the manifest (file
     list and schema), so planning it opens no footer and starts no
     Spark job; the same job group does see the jobs of running it."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     cat.write(KEY, _mkdf(spark, 10))
     cat.write(KEY, _mkdf(spark, 5, base=100))
-    sc = spark.sparkContext
-    group = f"plan-read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "plan a bucket read")
-    try:
+    with job_group() as jobs:
         df = cat.read(KEY).filter(F.col("ts") > 3)
         assert df.columns == ["ts", "user_id", "value"]
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert jobs() == []
         assert df.count() == 7  # ts 4..9 of the first write, ts 4 of the second
-        assert list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        assert jobs()
+
+
+def test_partitioned_bucket_keeps_its_layout(spark, tmp_path):
+    """A commit that names no layout inherits the bucket's: after a
+    delete, a compaction and a replace-where on a
+    ``write_bucket_store`` bucket the manifest still partitions by
+    (symbol, date), a partitioned append still lands, and the rows are
+    those the operations leave."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from marketstore_spark.catalog import TimeBucketKey
+    from marketstore_spark.sources.parquet import write_bucket_store
+
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def at(h):
+        return t0 + datetime.timedelta(hours=h)
+
+    def ticks(lo, hi, bump=0.0):
+        return spark.createDataFrame(
+            [Row(ts=at(h), user_id="AB"[h % 2], value=h + bump) for h in range(lo, hi)]
+        )
+
+    cat = Catalog(spark, str(tmp_path))
+    path = TimeBucketKey(KEY).path(cat.root)
+    write_bucket_store(ticks(0, 60), path)
+    rows = {(at(h), "AB"[h % 2], float(h)) for h in range(60)}
+
+    def check(appended_from):
+        assert txn.read_manifest(path, txn.current_version(path))["partition_by"] == [
+            "symbol",
+            "date",
+        ]
+        write_bucket_store(ticks(appended_from, appended_from + 3), path, mode="append")
+        rows.update((at(h), "AB"[h % 2], float(h)) for h in range(appended_from, appended_from + 3))
+        got = cat.read(KEY).select("ts", "user_id", "value").collect()
+        assert sorted(tuple(r) for r in got) == sorted(rows)
+
+    assert cat.delete_range(KEY, at(0), at(4)) == 5
+    rows -= {r for r in rows if r[0] <= at(4)}
+    check(100)
+
+    cat.compact(KEY)
+    check(200)
+
+    new = ticks(30, 40, bump=0.5)
+    new = new.withColumn("symbol", F.col("user_id")).withColumn("date", F.to_date("ts"))
+    cat._replace_where(KEY, F.col("ts") >= at(30), new)  # noqa: SLF001
+    rows = {r for r in rows if r[0] < at(30)}
+    rows.update((at(h), "AB"[h % 2], h + 0.5) for h in range(30, 40))
+    check(300)
