@@ -13,7 +13,7 @@ takes the host down ("the server does not handle panics ... better to
 just let it go" — bgworker.go header), and a bad spec fails at load
 time, not run time.
 
-The feeder/replication/ondiskagg streaming jobs in this repo are
+The feeder and ondiskagg streaming jobs in this repo are
 exactly the things a deployment would mount here (each exposes a
 start-returning-handle API already); ``StreamingQueryWorker`` adapts
 any of them to the worker interface.
@@ -181,9 +181,9 @@ class CompactionWorker:
 
 
 class StreamingQueryWorker:
-    """Adapts this repo's streaming jobs (feeder ingest, replication
-    mirror, ondiskagg rollup — anything whose ``start`` returns a
-    pyspark StreamingQuery) to the BgWorker interface."""
+    """Adapts this repo's streaming jobs (feeder ingest, ondiskagg
+    rollup — anything whose ``start`` returns a pyspark
+    StreamingQuery) to the BgWorker interface."""
 
     def __init__(self, start: Callable[[], Any]):
         self._start = start

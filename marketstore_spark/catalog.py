@@ -247,7 +247,7 @@ class Catalog:
     def create(self, key: str, df_schema_sample: DataFrame) -> None:
         """Create an empty bucket with the sample's schema."""
         path = TimeBucketKey(key).path(self.root)
-        if os.path.isdir(path):
+        if txn.current_version(path) is not None:
             raise FileExistsError(f"bucket exists: {key}")
         txn.commit_write(df_schema_sample.limit(0), path, mode="replace")
 
@@ -295,8 +295,9 @@ class Catalog:
 
     def read(self, key: str, version: int | None = None) -> DataFrame:
         """Scan the bucket's committed snapshot (explicit manifest file
-        list — half-staged files are structurally invisible).  Legacy
-        flat buckets read as-is.  ``version`` time-travels."""
+        list — half-staged files are structurally invisible).  A key
+        with no manifest raises FileNotFoundError.  ``version``
+        time-travels."""
         self.metrics.inc("reads_total")
         return txn.read_bucket(
             self.spark, TimeBucketKey(key).path(self.root), version=version
@@ -314,7 +315,7 @@ class Catalog:
         Returns the snapshot, or None when ``new`` creates the bucket."""
         path = TimeBucketKey(key).path(self.root)
         base = txn.current_version(path)
-        old = self.read(key, version=base) if new is None or os.path.isdir(path) else None
+        old = self.read(key, version=base) if new is None or base is not None else None
         out = new
         if old is not None:
             out = old.filter(~F.coalesce(drop, F.lit(False)))
@@ -352,7 +353,7 @@ class Catalog:
         size_b = sum(os.path.getsize(f) for f in files)
         nfiles = max(1, round(size_b / (target_file_mb * 1024 * 1024)))
         df = self.read(key, version=base).repartition(nfiles)
-        txn.commit_write(df, path, mode="replace", base_version=base)
+        self._commit(key, df, None, mode="replace", base_version=base)
         rows = self.read(key).count()
         files_after = len(txn.data_files(path))
         return {"files_before": len(files), "files_after": files_after, "rows": rows}

@@ -329,23 +329,19 @@ def main(argv: list[str] | None = None, spark=None, out=None, stdin=None) -> int
         path = TimeBucketKey(args.key).path(args.root)
         cur = txn.current_version(path)
         if cur is None:
-            print(json.dumps({"key": args.key, "layout": "legacy-flat"}), file=out)
-        else:
-            for v in range(cur + 1):
-                try:
-                    m = txn.read_manifest(path, v)
-                except FileNotFoundError:  # vacuumed away
-                    continue
-                print(
-                    json.dumps(
-                        {
-                            "version": v,
-                            "files": len(m["files"]),
-                            "current": v == cur,
-                        }
-                    ),
-                    file=out,
-                )
+            print(f"no bucket {args.key}: it has no manifest", file=sys.stderr)
+            return 1
+        for v in range(cur + 1):
+            try:
+                m = txn.read_manifest(path, v)
+            except FileNotFoundError:  # vacuumed away
+                continue
+            print(
+                json.dumps(
+                    {"version": v, "files": len(m["files"]), "current": v == cur}
+                ),
+                file=out,
+            )
     elif args.cmd == "du":
         from marketstore_spark.metrics import du_report
 

@@ -482,6 +482,7 @@ def build_ivf_index(
     later query turns its probe set into PARTITION PRUNING on the
     scan: only nprobe/nlist of the corpus files are ever opened.
     Returns the centroid matrix."""
+    from marketstore_spark import txn
     from marketstore_spark.catalog import TimeBucketKey
 
     centroids = train_ivf_centroids(corpus, nlist, id_col, vec_col)
@@ -490,16 +491,19 @@ def build_ivf_index(
         F.col(id_col), F.col(vec_col),
         F.element_at(assign1(_as_double(vec_col)), 1).alias("list_id"),
     )
-    assigned.write.partitionBy("list_id").mode("overwrite").parquet(
-        TimeBucketKey(index_key).path(catalog.root)
+    txn.commit_write(
+        assigned,
+        TimeBucketKey(index_key).path(catalog.root),
+        mode="replace",
+        partition_by=("list_id",),
     )
     spark = corpus.sparkSession
     cdf = spark.createDataFrame(
         [(i, [float(x) for x in centroids[i]]) for i in range(len(centroids))],
         "list_id int, centroid array<double>",
     )
-    cdf.coalesce(1).write.mode("overwrite").parquet(
-        TimeBucketKey(centroid_key).path(catalog.root)
+    txn.commit_write(
+        cdf.coalesce(1), TimeBucketKey(centroid_key).path(catalog.root), mode="replace"
     )
     return centroids
 

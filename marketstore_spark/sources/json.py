@@ -7,7 +7,8 @@ explicit schema (schema inference is a full extra pass at 100 TB —
 always pass one in production), timestamp normalization, then the
 same Catalog append path as CSV.  For continuous feeds the identical
 reader runs as `readStream.json` and lands through
-streaming/writer.append_sink (exactly-once via checkpoint).
+streaming/writer.append_sink (one manifest commit per micro-batch,
+exactly once by batch id).
 """
 
 from __future__ import annotations

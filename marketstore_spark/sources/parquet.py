@@ -34,7 +34,7 @@ def write_bucket_store(
     manifest records partition-relative file paths (Iceberg-style), so
     a writer dying mid-overwrite leaves the previous snapshot fully
     readable — the WAL guarantee (reference executor/wal.go) now covers
-    the partitioned 100 TB layout, not just flat buckets.  Returns the
+    the partitioned 100 TB layout, not just unpartitioned buckets.  Returns the
     committed version.
     """
     from marketstore_spark import txn
@@ -51,8 +51,7 @@ def write_bucket_store(
 def read_bucket_store(spark: SparkSession, root: str) -> DataFrame:
     """Read the partitioned store's committed snapshot; `symbol`/`date`
     come back as partition columns, so filters on them prune the
-    manifest's file list before any file is opened.  Pre-protocol flat
-    directories read as-is."""
+    manifest's file list before any file is opened."""
     from marketstore_spark import txn
 
     return txn.read_bucket(spark, root)

@@ -2,9 +2,13 @@
 
 Reference: frontend/write.go Write appends ColumnSeries to buckets
 through a WAL (executor/wal.go); contrib/*feeder pull external sources
-on a schedule.  In Spark, ingestion is a streaming source → parquet
-sink with checkpointing: exactly-once file commits replace the WAL, and
-`Trigger.AvailableNow` gives the feeder's batch-pull semantics.
+on a schedule.  In Spark, ingestion is a streaming source whose
+micro-batches each land as one manifest commit (txn.py, the WAL
+analogue), and `Trigger.AvailableNow` gives the feeder's batch-pull
+semantics.  A bucket directory is not a file-stream source: a replace
+commit (compact, delete_range) leaves its superseded files in place
+until vacuum, so a file stream over a bucket would re-read rows that
+are no longer in it.
 """
 
 from __future__ import annotations
@@ -27,10 +31,10 @@ def read_stream(
     recursive: bool = False,
 ) -> DataFrame:
     """File-based streaming source (new files under source_dir are the
-    incoming writes).  ``recursive`` follows subdirectories — needed
-    for txn-layout buckets whose files live under ``data/`` (the
-    listing skips ``_manifests``/``.stage-*``: `_`/`.` prefixes are
-    hidden to Spark's file index)."""
+    incoming writes).  ``recursive`` follows subdirectories.  Point it
+    at a landing directory, never at a bucket: a bucket keeps files a
+    replace commit superseded until vacuum, and a file stream would
+    read them as new rows."""
     reader = spark.readStream.format(fmt).schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -70,20 +74,25 @@ def append_sink(
     checkpoint_dir: str | None = None,
     partition_by: list[str] | None = None,
     available_now: bool = True,
-    output_mode: str = "append",
 ) -> StreamingQuery:
-    """Append the stream to a parquet bucket with exactly-once file
-    commits (the WAL equivalent).  ``partition_by`` (e.g. symbol, date)
-    is the on-disk layout that makes later range queries prune."""
-    checkpoint_dir = checkpoint_dir or os.path.join(dest_dir, "_checkpoint")
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", dest_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
+    """Append the stream to a bucket, one manifest commit per
+    micro-batch.  The commit records the batch id under the sink id
+    (the absolute checkpoint path), so a batch Spark replays after a
+    crash between the commit and its own offset log is skipped: exactly
+    once.  ``partition_by`` (e.g. symbol, date) is the on-disk layout
+    that makes later range queries prune."""
+    checkpoint_dir = os.path.abspath(
+        checkpoint_dir or os.path.join(dest_dir, "_checkpoint")
     )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+
+    def commit(batch: DataFrame, batch_id: int) -> None:
+        txn.commit_write(
+            batch, dest_dir, partition_by=partition_by, stream=(checkpoint_dir, batch_id)
+        )
+
+    writer = df.writeStream.foreachBatch(commit).option(
+        "checkpointLocation", checkpoint_dir
+    )
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -21,9 +21,17 @@ dependencies):
   on the table pointer): re-read the current version, rebuild the file
   set, try ``n+1``.  A commit that names no ``partition_by`` keeps the
   current manifest's, so only ``write_bucket_store`` chooses a layout.
-- The current version is simply the highest manifest present.  A crash
-  at ANY earlier point leaves orphan data files / temp manifests —
-  swept by :func:`vacuum` — and never a partially-visible bucket.
+- The current version is simply the highest manifest present, and a
+  bucket exists exactly when it has one.  A crash at ANY earlier point
+  leaves orphan data files / temp manifests — swept by :func:`vacuum`
+  — and never a partially-visible bucket.
+- Every manifest carries ``streams``, ``{sink id: last batch id}`` for
+  each streaming sink that committed into the bucket
+  (``streaming/writer.append_sink``; Delta's ``txnAppId``/``txnVersion``),
+  and every commit, append or replace, carries it forward.  A sink
+  replaying a batch at or below its marker publishes nothing, so a
+  crash between a publish and the stream's own offset commit cannot
+  append the batch twice.
 
 Append commits cost O(new files): the new manifest is old-list ∪ new
 files.  Replace commits (compact, and ``Catalog._replace_where`` behind
@@ -84,12 +92,8 @@ def _manifest_dir(bucket: str) -> str:
     return os.path.join(bucket, MANIFEST_DIR)
 
 
-def is_versioned(bucket: str) -> bool:
-    return os.path.isdir(_manifest_dir(bucket))
-
-
 def current_version(bucket: str) -> int | None:
-    """Highest published manifest id, or None for a legacy/flat bucket."""
+    """Highest published manifest id, or None when there is no bucket."""
     mdir = _manifest_dir(bucket)
     if not os.path.isdir(mdir):
         return None
@@ -108,41 +112,22 @@ def read_manifest(bucket: str, version: int) -> dict:
 
 def data_files(bucket: str, version: int | None = None) -> list[str]:
     """Absolute paths of the files that make up ``version`` (default:
-    current).  Legacy flat buckets return their part-files directly."""
+    current; none when there is no bucket)."""
     if version is None:
         version = current_version(bucket)
-    if version is None:  # legacy layout: every parquet file is live
-        return sorted(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(bucket)
-            for f in fs
-            if f.endswith(".parquet") and MANIFEST_DIR not in r
-        )
+        if version is None:
+            return []
     m = read_manifest(bucket, version)
     return [os.path.join(bucket, rel) for rel in m["files"]]
 
 
-def _protocol_component(rel_root: str) -> bool:
-    """True when ``rel_root``'s FIRST path component is protocol-owned
-    (manifests / committed data / staging).  Exact component match, not
-    a string prefix: a legacy subdirectory literally named
-    ``database/`` or ``data2/`` must NOT match ``data`` — a prefix test
-    would silently drop its files from the adoption manifest and vacuum
-    would then delete them as unreferenced."""
-    first = rel_root.split(os.sep, 1)[0]
-    return first in (MANIFEST_DIR, DATA_DIR) or first.startswith(_STAGE_PREFIX)
-
-
-def _legacy_relative_files(bucket: str) -> list[str]:
-    out = []
-    for r, _, fs in os.walk(bucket):
-        rel_root = os.path.relpath(r, bucket)
-        if rel_root != "." and _protocol_component(rel_root):
-            continue
-        for f in fs:
-            if f.endswith(".parquet"):
-                out.append(f if rel_root == "." else os.path.join(rel_root, f))
-    return sorted(out)
+def _committed(manifest: dict, stream: tuple[str, int] | None) -> bool:
+    """True when ``stream`` (sink id, batch id) is at or below the
+    sink's marker in ``manifest``: that batch is already published."""
+    if stream is None:
+        return False
+    sink, batch = stream
+    return manifest.get("streams", {}).get(sink, -1) >= batch
 
 
 def stage_files(
@@ -266,6 +251,7 @@ def publish(
     crash_hook=None,
     base_version: int | None = None,
     partition_by: tuple[str, ...] | None = None,
+    stream: tuple[str, int] | None = None,
 ) -> int:
     """Atomically publish a new version.  ``mode='append'`` unions the
     current file list with ``new_files``; ``mode='replace'`` makes
@@ -279,28 +265,36 @@ def publish(
     ``new_files`` would drop the concurrently appended rows (the
     classic lost update).
 
+    ``stream`` is the (sink id, batch id) a streaming sink commits; it
+    becomes the sink's marker, and a batch already at or below the
+    marker publishes nothing and returns the current version.  Every
+    other sink's marker is carried forward unchanged.
+
     ``crash_hook(point)`` is a fault-injection seam for the crash tests
     (points: 'pre_publish') — production callers leave it None.
     """
     while True:
         cur = current_version(bucket)
+        base = {} if cur is None else read_manifest(bucket, cur)
+        if _committed(base, stream):
+            return cur
         if mode == "append":
             if cur is not None:
-                base = read_manifest(bucket, cur)
                 _check_schema_compatible(base["schema"], schema_json, bucket)
                 if tuple(base.get("partition_by") or ()) != tuple(partition_by or ()):
                     raise ValueError(
                         f"append partitioning {partition_by!r} does not match "
                         f"bucket {bucket!r}'s {base.get('partition_by')!r}"
                     )
-                files = base["files"] + list(new_files)
                 schema_json = schema_json or base["schema"]
-            else:  # first commit over a legacy flat bucket adopts its files
-                files = _legacy_relative_files(bucket) + list(new_files)
+            files = base.get("files", []) + list(new_files)
         elif cur != base_version:
             files = _merge_replace_files(bucket, base_version, cur, new_files)
         else:
             files = list(new_files)
+        streams = dict(base.get("streams", {}))
+        if stream is not None:
+            streams[stream[0]] = stream[1]
         nxt = 0 if cur is None else cur + 1
         payload = json.dumps(
             {
@@ -308,6 +302,7 @@ def publish(
                 "files": files,
                 "schema": schema_json,
                 "partition_by": list(partition_by or ()),
+                "streams": streams,
             }
         )
         if link_manifest(bucket, nxt, payload, crash_hook):
@@ -321,22 +316,28 @@ def commit_write(
     crash_hook=None,
     base_version=_UNSET,
     partition_by: tuple[str, ...] | None = None,
+    stream: tuple[str, int] | None = None,
 ) -> int:
     """Stage ``df`` and publish it in one call (the Catalog write path).
 
     Replace callers that computed ``df`` from an earlier snapshot should
     pass that snapshot's version as ``base_version`` so concurrent
     appends are detected (merged) rather than silently dropped.  No
-    ``partition_by`` keeps the current manifest's layout."""
+    ``partition_by`` keeps the current manifest's layout.  A ``stream``
+    batch already committed (see :func:`publish`) returns the current
+    version before anything is staged."""
     os.makedirs(bucket, exist_ok=True)
     cur = current_version(bucket)
+    base = {} if cur is None else read_manifest(bucket, cur)
+    if _committed(base, stream):
+        return cur
     if base_version is _UNSET and mode == "replace":
         # The caller's df was planned from the bucket no later than now;
         # capture the snapshot before staging (which can take minutes on
         # a big rewrite — plenty of time for a concurrent append).
         base_version = cur
     if partition_by is None and cur is not None:
-        partition_by = tuple(read_manifest(bucket, cur).get("partition_by") or ())
+        partition_by = tuple(base.get("partition_by") or ())
     rels, schema_json = stage_files(df, bucket, partition_by=partition_by)
     return publish(
         bucket,
@@ -346,6 +347,7 @@ def commit_write(
         crash_hook=crash_hook,
         base_version=base_version,
         partition_by=partition_by,
+        stream=stream,
     )
 
 
@@ -364,10 +366,10 @@ def read_bucket(
     committed schema (a string value like ``'007'`` stays a string) —
     filters on them prune files at PLANNING time exactly as a directory
     scan would, but against the committed file list."""
-    if not is_versioned(bucket):
-        return spark.read.parquet(bucket)  # legacy flat layout
     if version is None:
         version = current_version(bucket)
+        if version is None:
+            raise FileNotFoundError(f"bucket {bucket!r} has no manifest")
     m = read_manifest(bucket, version)
     files = [os.path.join(bucket, rel) for rel in m["files"]]
     schema = StructType.fromJson(json.loads(m["schema"])) if m["schema"] else None
@@ -430,8 +432,6 @@ def vacuum(
         else:
             os.unlink(os.path.join(mdir, f))
             removed_manifests += 1
-    # Sweep every unreferenced parquet file — data/ orphans AND flat
-    # legacy files superseded after the bucket was adopted.
     empty_check: set[str] = set()
     for r, _, fs in os.walk(bucket):
         rel_root = os.path.relpath(r, bucket)

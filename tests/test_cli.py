@@ -89,6 +89,17 @@ def test_cli_versions_and_vacuum(spark, store):
     assert len(rows) == 1 and rows[0]["current"]
 
 
+def test_cli_versions_of_key_without_manifest_fails(spark, store, capsys):
+    """A key with no manifest is no bucket: `versions` exits non-zero
+    and names the key."""
+    root, _ = store
+    os.makedirs(os.path.join(root, "NONE", "1Min", "TICK"))  # a bare directory
+    buf = io.StringIO()
+    assert main(["--root", root, "versions", "NONE/1Min/TICK"], spark=spark, out=buf) != 0
+    assert buf.getvalue() == ""
+    assert "NONE/1Min/TICK" in capsys.readouterr().err
+
+
 def test_cli_connect_repl_scripted_session(spark, store):
     """cmd/connect analogue: a scripted stdin drives the interactive
     shell — SQL with TBK backticks, \\l and \\i session commands, an

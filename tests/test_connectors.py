@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from marketstore_spark import txn
 from marketstore_spark.catalog import Catalog
 from marketstore_spark.streaming.connectors import (
     binance_interval,
@@ -286,10 +287,12 @@ def test_polygon_landing_zone_stream(spark, tmp_path):
     q.awaitTermination(120)
 
     got = sorted(
-        spark.read.parquet(os.fspath(dest)).collect(), key=lambda r: r["ts"]
+        txn.read_bucket(spark, os.fspath(dest)).collect(), key=lambda r: r["ts"]
     )
     # frame-001 contributes its single valid print, frame-002 one more
     assert [(r["price"], r["size"]) for r in got] == [(114.125, 100), (115.0, 300)]
+    m = txn.read_manifest(os.fspath(dest), txn.current_version(os.fspath(dest)))
+    assert m["partition_by"] == ["ingest_date"]
 
 
 # ---------------------------------------------------------------------

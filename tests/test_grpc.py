@@ -387,7 +387,7 @@ def test_grpc_create_from_data_shapes(grpc_stack):
 
 def test_grpc_error_paths(grpc_stack):
     cli, _ = grpc_stack
-    from marketstore_spark.grpcfront import GrpcError, UNIMPLEMENTED
+    from marketstore_spark.grpcfront import NOT_FOUND, UNIMPLEMENTED, GrpcError
 
     with pytest.raises(KeyError):
         cli.call("Bogus")  # not in the client method table
@@ -404,9 +404,10 @@ def test_grpc_error_paths(grpc_stack):
         b"\x00\x00\x00\x00\x00",
     )
     assert dict(trailers)["grpc-status"] == str(UNIMPLEMENTED)
-    # missing bucket → non-zero status via the client helper
-    with pytest.raises(GrpcError):
+    # missing bucket → NOT_FOUND via the client helper
+    with pytest.raises(GrpcError) as missing:
         cli.query("GNOPE/1Min/OHLCV")
+    assert missing.value.status == NOT_FOUND
     # compressed-flag messages are refused
     _h, _b, trailers = cli.conn.request(
         [

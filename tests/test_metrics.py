@@ -62,6 +62,17 @@ def test_catalog_ops_feed_registry(spark, tmp_path):
     assert snap["histograms"]["write_duration_seconds"]["count"] == 1
 
 
+def test_compact_is_timed_as_a_write(spark, tmp_path):
+    m = MetricsRegistry()
+    cat = Catalog(spark, str(tmp_path), metrics=m)
+    cat.write("MET/1Min/TICK", _mkdf(spark, 5))
+    before = m.snapshot()["histograms"]["write_duration_seconds"]["count"]
+    cat.compact("MET/1Min/TICK")
+    snap = m.snapshot()
+    assert snap["histograms"]["write_duration_seconds"]["count"] == before + 1
+    assert snap["counters"]["writes_total"] == 1  # a rewrite adds no rows
+
+
 def test_du_report_live_vs_total(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path), metrics=MetricsRegistry())
     for i in range(3):

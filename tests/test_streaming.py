@@ -11,7 +11,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from marketstore_spark.catalog import Catalog, load_table
+from marketstore_spark import txn
+from marketstore_spark.catalog import Catalog, TimeBucketKey, load_table
 from marketstore_spark.operators.candler import tick_candles
 from marketstore_spark.streaming.ondiskagg import stream_candles
 from marketstore_spark.streaming.pubsub import StreamHub
@@ -79,6 +80,82 @@ def test_append_writer_roundtrip(spark, sf_dir, tmpdir):
     q2 = append_sink(stream2, dest, checkpoint_dir=os.path.join(tmpdir, "ckpt"))
     q2.awaitTermination(120)
     assert cat.read("SYM/1Min/TICK").count() == ev.count()
+
+
+def _ticks(spark, n, base):
+    return spark.range(base, base + n).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds("id").alias("ts"),
+        F.col("id").cast("double").alias("value"),
+    )
+
+
+def _land(spark, src, n, base):
+    _ticks(spark, n, base).coalesce(1).write.mode("append").parquet(src)
+
+
+def _sink(spark, src, dest, ckpt):
+    stream = read_stream(spark, src, _ticks(spark, 0, 0).schema)
+    append_sink(stream, dest, checkpoint_dir=ckpt).awaitTermination(120)
+
+
+def _bucket_files(dest):
+    return sorted(
+        os.path.relpath(os.path.join(r, f), dest)
+        for r, _, fs in os.walk(dest)
+        for f in fs
+        if txn.MANIFEST_DIR not in r
+    )
+
+
+def test_sink_and_catalog_writes_share_one_bucket(spark, tmpdir):
+    """Streamed batches and Catalog writes are commits of one manifest
+    log: every row of both feeds is read back, and vacuum keeps every
+    file the stream wrote."""
+    src, ckpt = os.path.join(tmpdir, "incoming"), os.path.join(tmpdir, "ckpt")
+    cat = Catalog(spark, os.path.join(tmpdir, "buckets"))
+    key = "MIX/1Min/TICK"
+    dest = TimeBucketKey(key).path(cat.root)
+    _land(spark, src, 100, 0)
+    _sink(spark, src, dest, ckpt)
+    cat.write(key, _ticks(spark, 10, 1000))
+    _land(spark, src, 100, 2000)
+    _sink(spark, src, dest, ckpt)
+    assert cat.read(key).count() == 210
+    assert cat.vacuum(key, min_age_seconds=0)["removed_files"] == 0
+    assert cat.read(key).count() == 210
+    m = txn.read_manifest(dest, txn.current_version(dest))
+    assert m["streams"] == {os.path.abspath(ckpt): 1}
+
+
+def test_replayed_sink_batch_publishes_nothing(spark, tmpdir):
+    """A crash after the sink's commit but before Spark's own commit
+    log entry replays the batch under the same id.  The manifest's
+    marker skips it before anything is staged, also after a compact and
+    a delete_range, whose replace commits carry the marker forward."""
+    src, ckpt = os.path.join(tmpdir, "incoming"), os.path.join(tmpdir, "ckpt")
+    cat = Catalog(spark, os.path.join(tmpdir, "buckets"))
+    key = "RPL/1Min/TICK"
+    dest = TimeBucketKey(key).path(cat.root)
+    _land(spark, src, 100, 0)
+    _sink(spark, src, dest, ckpt)
+    steps = [
+        lambda: None,
+        lambda: cat.compact(key),
+        lambda: cat.delete_range(key, 0, 9, ts_col="event_id"),
+    ]
+    for step, rows in zip(steps, (100, 100, 90)):
+        step()
+        version, files = txn.current_version(dest), _bucket_files(dest)
+        for name in ("0", ".0.crc"):  # forget that batch 0 committed
+            if os.path.exists(os.path.join(ckpt, "commits", name)):
+                os.remove(os.path.join(ckpt, "commits", name))
+        _sink(spark, src, dest, ckpt)
+        assert os.path.exists(os.path.join(ckpt, "commits", "0"))  # replayed
+        assert txn.current_version(dest) == version
+        assert _bucket_files(dest) == files
+        assert cat.read(key).count() == rows
+        assert txn.read_manifest(dest, version)["streams"] == {os.path.abspath(ckpt): 0}
 
 
 def test_pubsub_glob_routing(spark, sf_dir, tmpdir):
@@ -204,32 +281,6 @@ def test_stateful_gap_detector_matches_batch(spark, sf_dir, tmpdir):
     assert len(got) == len(want) > 0
     assert (got["g"].values == want["g"].values).all()
     assert (got["user_id"].values == want["user_id"].values).all()
-
-
-def test_replication_catchup_and_idempotent(spark, sf_dir, tmpdir):
-    """replication/: master bucket mirrors to a replica catalog;
-    re-sync moves only new appends and never duplicates."""
-    from marketstore_spark.streaming.replication import replicate_bucket
-
-    ev = load_table(spark, sf_dir, "events")
-    master = Catalog(spark, os.path.join(tmpdir, "master"))
-    replica = Catalog(spark, os.path.join(tmpdir, "replica"))
-    master.write("R/1Min/TICK", ev.limit(500))
-
-    q = replicate_bucket(master, replica, "R/1Min/TICK")
-    q.awaitTermination(120)
-    assert replica.read("R/1Min/TICK").count() == 500
-
-    # new append on master → only the delta flows on next sync
-    master.write("R/1Min/TICK", ev.limit(200))
-    q2 = replicate_bucket(master, replica, "R/1Min/TICK")
-    q2.awaitTermination(120)
-    assert replica.read("R/1Min/TICK").count() == 700
-
-    # idempotent re-run: no new files, no duplicates
-    q3 = replicate_bucket(master, replica, "R/1Min/TICK")
-    q3.awaitTermination(120)
-    assert replica.read("R/1Min/TICK").count() == 700
 
 
 def test_watermark_drops_late_data(spark, tmpdir):

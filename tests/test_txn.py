@@ -129,15 +129,6 @@ def test_compact_reclaims_and_preserves_rows(cat, spark):
     assert cat.read(KEY).count() == 50
 
 
-def test_legacy_flat_bucket_adopted_on_first_commit(cat, spark, tmp_path):
-    path = str(tmp_path / "LEG" / "1Min" / "TICK")
-    _mkdf(spark, 8).write.parquet(path)  # pre-protocol flat bucket
-    assert cat.read("LEG/1Min/TICK").count() == 8  # legacy read path
-    cat.write("LEG/1Min/TICK", _mkdf(spark, 2, base=100))
-    assert cat.read("LEG/1Min/TICK").count() == 10  # adopted + appended
-    assert txn.current_version(path) == 0
-
-
 def test_create_empty_bucket_readable_schema(cat, spark):
     cat.create(KEY, _mkdf(spark, 1))
     df = cat.read(KEY)
@@ -145,6 +136,19 @@ def test_create_empty_bucket_readable_schema(cat, spark):
     assert set(df.columns) == {"ts", "user_id", "value"}
     with pytest.raises(FileExistsError):
         cat.create(KEY, _mkdf(spark, 1))
+
+
+def test_bucket_exists_iff_it_has_a_manifest(cat, spark):
+    """A directory a dead create left without a manifest is no bucket:
+    reading it raises FileNotFoundError naming it, and create works."""
+    path = cat.root + "/TEST/1Min/TICK"
+    os.makedirs(os.path.join(path, ".stage-deadbeef"))
+    with pytest.raises(FileNotFoundError, match="TEST/1Min/TICK"):
+        cat.read(KEY)
+    assert txn.data_files(path) == []
+    cat.create(KEY, _mkdf(spark, 1))
+    assert cat.read(KEY).count() == 0
+    assert txn.current_version(path) == 0
 
 
 def test_concurrent_appends_all_land(cat, spark):
@@ -223,22 +227,6 @@ def test_vacuum_spares_young_inflight_staging(cat, spark, tmp_path):
     assert swept["removed_files"] == 0
     v = txn.publish(path, rels, schema, mode="append")  # commit still works
     assert cat.read(KEY, version=v).count() == 8
-
-
-def test_legacy_subdir_named_like_protocol_dirs_adopted(cat, spark, tmp_path):
-    """A legacy bucket subdirectory literally named 'database/' must be
-    adopted (exact first-component match, not startswith('data'))."""
-    path = str(tmp_path / "LEG2" / "1Min" / "TICK")
-    _mkdf(spark, 4).write.parquet(os.path.join(path, "database"))
-    _mkdf(spark, 3, base=100).coalesce(1).write.mode("append").parquet(path)
-    cat.write("LEG2/1Min/TICK", _mkdf(spark, 2, base=200))  # adopt + append
-    adopted = txn.read_manifest(path, 0)["files"]
-    assert any(f.startswith("database") for f in adopted), adopted
-    assert cat.read("LEG2/1Min/TICK").count() == 9
-    # and vacuum (past retention) must NOT delete the adopted files
-    swept = txn.vacuum(path, min_age_seconds=0)
-    assert swept["removed_files"] == 0
-    assert cat.read("LEG2/1Min/TICK").count() == 9
 
 
 def test_partitioned_commit_crash_leaves_old_snapshot(spark, tmp_path):
