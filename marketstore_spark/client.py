@@ -11,11 +11,11 @@ Arrow (``toPandas``) instead of the NumpyMultiDataset msgpack frames
 (utils/io), and queries compile to Catalyst plans instead of scanner
 calls.
 
-Scale: one query = one declarative plan per requested key — time
-predicates and projections push into the Parquet scan; directional
-limits on a single bucket compile to TakeOrderedAndProject (top-K, no
-global sort).  ``.df()`` is the only collect point, sized by the
-user's own limit/range.
+Scale: one query = one plan per requested key, built by
+plans/query.run_query — time predicates and projections push into the
+Parquet scan; directional limits on a single bucket compile to
+TakeOrderedAndProject (top-K, no global sort).  ``.df()`` is the only
+collect point, sized by the user's own limit/range.
 """
 
 from __future__ import annotations
@@ -25,11 +25,9 @@ from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from marketstore_spark.catalog import Catalog
-from marketstore_spark.operators import slice as slice_ops
-from marketstore_spark.plans.query import QueryParams, apply_functions
+from marketstore_spark.plans.query import QueryParams, run_query
 from marketstore_spark.plans.sqlfront import MarketSQL
 
 
@@ -74,7 +72,7 @@ class DataSet:
         conversion, one array per column."""
         import numpy as np  # noqa: F401  (return type)
 
-        pdf = self._df.toPandas()
+        pdf = self.df()
         return {c: pdf[c].to_numpy() for c in pdf.columns}
 
     def dataframe(self) -> DataFrame:
@@ -110,45 +108,19 @@ class Client:
 
     # -- query (frontend/query.go:143) ------------------------------------
     def query(self, params: Params) -> QueryReply:
+        # one bucket, one symbol; the catalog gives adjust() its CA
+        # bucket, like the reference's caloader
         out = []
-        for key in params.keys():
-            df = self.catalog.read(key)
-            df = slice_ops.time_range(df, self.ts_col, params.start, params.end)
-            if params.limit is not None:
-                # Single bucket == single key: a directional head/tail
-                # compiles to TakeOrderedAndProject (bounded top-K per
-                # partition, merged on the driver), not a full sort.
-                # Ties on ts break deterministically on the remaining
-                # columns, mirroring slice.limit_records.
-                tiebreak = (
-                    ["event_id"]
-                    if "event_id" in df.columns
-                    else [c for c in df.columns if c != self.ts_col]
-                )
-                order = [F.col(self.ts_col)] + [F.col(c) for c in tiebreak]
-                if params.limit_from_start:
-                    df = df.orderBy(*[c.asc() for c in order]).limit(params.limit)
-                else:
-                    df = (
-                        df.orderBy(*[c.desc() for c in order])
-                        .limit(params.limit)
-                        .orderBy(*[c.asc() for c in order])
-                    )
-            df = slice_ops.project_columns(df, params.columns)
-            # one bucket, one symbol; the catalog gives adjust() its CA
-            # bucket, like the reference's caloader
+        for sym, key in zip(params.symbol_list, params.keys()):
             qp = QueryParams(
-                symbols=[key.split("/")[0]], symbol_col=None,
-                ts_col=self.ts_col, functions=params.functions,
+                symbols=[sym], symbol_col=None,
+                epoch_start=params.start, epoch_end=params.end,
+                limit_record_count=params.limit,
+                limit_from_start=params.limit_from_start,
+                columns=params.columns, functions=params.functions,
+                ts_col=self.ts_col,
             )
-            df = apply_functions(df, qp, self.catalog)
-            if params.limit is None and self.ts_col in df.columns:
-                # the reference's storage is time-indexed, so Query
-                # always returns Epoch order (executor/reader.go); a
-                # parquet bucket scans in file order, so order here.
-                # The sort is bounded by the result the caller is
-                # about to collect — never wider than the query range.
-                df = df.orderBy(F.col(self.ts_col).asc())
+            df = run_query(self.catalog.read(key), qp, self.catalog)
             out.append(DataSet(key, df))
         return QueryReply(out)
 

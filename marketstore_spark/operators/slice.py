@@ -9,7 +9,10 @@ column so Catalyst pushes it into the Parquet scan (and prunes
 partitions when the ts-derived date is a partition column).  The
 directional limit is per key via row_number over (key) — one shuffle by
 key, no global sort; with N symbols and last-k per symbol the state per
-partition is O(rows/partitions).
+partition is O(rows/partitions).  A keyless limit (one bucket, one
+series) is a bounded top-K instead, not a row_number window:
+``orderBy(...).limit(n)`` plans TakeOrderedAndProject (k rows per
+partition, merged on the driver).
 """
 
 from __future__ import annotations
@@ -45,9 +48,14 @@ def limit_records(
 
     Reference: QueryRequest.LimitRecordCount + LimitFromStart
     (frontend/query.go:39-42); ties broken deterministically by the
-    trailing order columns.
+    trailing order columns.  With no ``key_cols`` the frame is one
+    series: the rows come back ascending in the order columns, a tail
+    re-sorted after its top-K.
     """
     ordering = [F.col(c).asc() if from_start else F.col(c).desc() for c in order_cols]
+    if not key_cols:
+        df = df.orderBy(*ordering).limit(n)
+        return df if from_start else df.orderBy(*[F.col(c).asc() for c in order_cols])
     w = Window.partitionBy(*key_cols).orderBy(*ordering)
     return (
         df.withColumn("__rn", F.row_number().over(w))

@@ -1,18 +1,24 @@
-"""QueryRequest → DataFrame planner, and the one UDA registry.
+"""The one QueryRequest → DataFrame planner, and the one UDA registry.
 
 Reference: frontend/query.go QueryRequest — destination key(s), epoch
 start/end (+nanos), limit_record_count + limit_from_start, columns, and
 an experimental ``Functions`` chain resolved through the UDA registry
-(sqlparser/registry.go NewDefaultAggRunner, Run).  registry.go
-registers each UDA once, and both Query's chain and the UDA calls in
-a SQL select list resolve through it; :data:`REGISTRY` is that table
-here, shared by :func:`run_query`, ``Client.query`` (so every wire
-``Query``) and MarketSQL (plans/sqlfront.py).
+(sqlparser/registry.go NewDefaultAggRunner, Run).  :func:`run_query` is
+the only place a QueryRequest becomes a plan: the registered
+``query_*``/``multi_query`` keys call it on a many-symbol frame keyed by
+``symbol_col``, and ``Client.query`` (so every msgpack, JSON and gRPC
+``Query``) calls it once per bucket with ``symbol_col=None``.
+registry.go registers each UDA once, and both Query's chain and the UDA
+calls in a SQL select list resolve through it; :data:`REGISTRY` is that
+table here, shared by :func:`run_query` and MarketSQL
+(plans/sqlfront.py).
 
 Spark design: the request compiles to one declarative DataFrame plan —
 Catalyst then pushes the time predicates and the projection into the
-Parquet scan.  The function chain is a fold over registered
-DataFrame→DataFrame operators, mirroring AggRunner.Run's
+Parquet scan.  A limit is a per-symbol row_number window on a keyed
+frame and a bounded top-K (TakeOrderedAndProject) on one bucket
+(operators/slice.limit_records).  The function chain is a fold over
+registered DataFrame→DataFrame operators, mirroring AggRunner.Run's
 chain-the-output-into-the-next-input loop (registry.go:52-64).
 """
 
@@ -522,18 +528,25 @@ def apply_functions(df: DataFrame, params: QueryParams, catalog=None) -> DataFra
     return df
 
 
-def run_query(df: DataFrame, params: QueryParams) -> DataFrame:
-    """Compile a QueryRequest to a single DataFrame plan."""
-    if params.symbols:
+def run_query(df: DataFrame, params: QueryParams, catalog=None) -> DataFrame:
+    """Compile a QueryRequest to a single DataFrame plan; ``catalog``
+    supplies the CA bucket to adjust().  A limit orders by ts, then the
+    tiebreak columns the frame has, else every other column."""
+    ts, keys = params.ts_col, [params.symbol_col] if params.symbol_col else []
+    if params.symbols and keys:
         df = df.filter(F.col(params.symbol_col).isin(list(params.symbols)))
-    df = slice_ops.time_range(df, params.ts_col, params.epoch_start, params.epoch_end)
+    df = slice_ops.time_range(df, ts, params.epoch_start, params.epoch_end)
     if params.limit_record_count is not None:
+        cols = df.columns
+        tb = [c for c in params.tiebreak if c in cols] or [c for c in cols if c != ts]
         df = slice_ops.limit_records(
-            df,
-            params.limit_record_count,
-            key_cols=[params.symbol_col],
-            order_cols=[params.ts_col, *params.tiebreak],
+            df, params.limit_record_count, key_cols=keys, order_cols=[ts, *tb],
             from_start=params.limit_from_start,
         )
     df = slice_ops.project_columns(df, params.columns)
-    return apply_functions(df, params)
+    df = apply_functions(df, params, catalog)
+    if not keys and params.limit_record_count is None and ts in df.columns:
+        # the reference's storage is time-indexed, so Query returns
+        # Epoch order (executor/reader.go); a bucket scans in file order
+        df = df.orderBy(F.col(ts).asc())
+    return df

@@ -608,14 +608,13 @@ def make_server(
     """Build (but don't start) the RPC server; ``port=0`` binds an
     ephemeral port (``server.server_address[1]`` reads it back).
     ``hub`` (a streaming.pubsub.StreamHub) enables the ``GET /stream``
-    long-poll subscription endpoint."""
-    from marketstore_spark.metrics import MetricsRegistry
-
+    long-poll subscription endpoint.  RPC counters land in the
+    catalog's own registry, so ``/metrics`` shows reads and writes too."""
     service = DataService(catalog)
     handler = type(
         "BoundHandler",
         (_Handler,),
-        {"service": service, "hub": hub, "metrics": MetricsRegistry()},
+        {"service": service, "hub": hub, "metrics": catalog.metrics},
     )
     return ThreadingHTTPServer((host, port), handler)
 

@@ -102,14 +102,16 @@ class OnDiskAggTrigger:
         ).first()
         if bounds[0] is None:
             return
+        # one snapshot of the source feeds every destination
+        source = self.catalog.read(key)
+        cols = set(source.columns)
         for i, dest_tf in enumerate(self.destinations):
             lo_v, hi_v = bounds[2 * i], bounds[2 * i + 1]
 
             def in_window(c):
                 return (F.col(c) >= F.lit(lo_v)) & (F.col(c) < F.lit(hi_v))
 
-            src = self.catalog.read(key).filter(in_window(self.ts_col))
-            cols = set(src.columns)
+            src = source.filter(in_window(self.ts_col))
             if {"open", "high", "low", "close"} <= cols:
                 out = candle_candles(
                     src, dest_tf, key_cols=(), ts_col=self.ts_col,

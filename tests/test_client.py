@@ -183,3 +183,50 @@ def test_macd_partial_args_fall_back_to_defaults(cli):
     p = Params("SYM1", "1Min", "TICK", functions=["macd(10)"])
     pdf = cli.query(p).first().df()
     assert {"macd", "signal", "histogram"} <= set(pdf.columns)
+
+
+def _executed(df):
+    return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+
+
+def test_one_bucket_tail_is_a_top_k_through_run_query(cli):
+    """A one-bucket tail through Client.query (every wire Query) plans
+    the bounded top-K, not a row_number Window, and run_query with no
+    symbol column gives the same rows: the two are one planner."""
+    from marketstore_spark.plans.query import QueryParams, run_query
+
+    df = cli.query(Params("SYM1", "1Min", "TICK", limit=9)).first().dataframe()
+    plan = _executed(df)
+    assert "TakeOrderedAndProject" in plan and "Window" not in plan
+    direct = run_query(
+        cli.catalog.read("SYM1/1Min/TICK"),
+        QueryParams(symbols=["SYM1"], symbol_col=None, limit_record_count=9),
+    )
+    assert [tuple(r) for r in df.collect()] == [tuple(r) for r in direct.collect()]
+
+
+def test_tail_ties_on_ts_break_on_the_remaining_columns(spark, tmp_path):
+    """A bucket with no event_id and many rows per ts, written in
+    several appends: the last N rows are the same on every run and
+    equal a pandas tail sorted by ts, then by every other column."""
+    import datetime as dt
+
+    import pandas as pd
+
+    rows = [
+        (dt.datetime(2024, 1, 2, 9, i % 4), float(i % 5), i % 3)
+        for i in range(60)
+    ]
+    cat = Catalog(spark, os.path.join(str(tmp_path), "root"))
+    for part in (rows[0::3], rows[1::3], rows[2::3]):
+        cat.write(
+            "TIE/1Min/TICK",
+            spark.createDataFrame(part, "ts timestamp, value double, size long"),
+        )
+    pdf = pd.DataFrame(rows, columns=["ts", "value", "size"])
+    want = pdf.sort_values(["ts", "value", "size"]).tail(10)
+    want = [tuple(r) for r in want.itertuples(index=False)]
+    client = Client(cat)
+    for _ in range(3):
+        got = client.query(Params("TIE", "1Min", "TICK", limit=10)).first().df()
+        assert [tuple(r) for r in got.itertuples(index=False)] == want

@@ -365,6 +365,42 @@ def test_metrics_endpoint_counts_rpcs(rpc):
     assert "rpc_request_seconds" in text  # histogram present
 
 
+def test_metrics_endpoint_shares_the_catalog_registry(spark, tmp_path):
+    """The RPC listener records into the catalog's registry, so
+    /metrics shows the catalog's write counters and latencies next to
+    the per-method RPC counters."""
+    from marketstore_spark.metrics import MetricsRegistry
+
+    m = MetricsRegistry()
+    cat = Catalog(spark, str(tmp_path / "root"), metrics=m)
+    srv, _t = serve_background(cat)
+    port = srv.server_address[1]
+    try:
+        body = json.dumps(
+            {
+                "jsonrpc": "2.0", "id": 1, "method": "DataService.Write",
+                "params": {"requests": [{"key": "MET/1Min/TICK", "data": {
+                    "columns": {"ts": [1_704_067_200_000_000_000], "value": [1.5]},
+                    "ts_columns": ["ts"],
+                }}]},
+            }
+        ).encode()
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}/rpc", data=body,
+            headers={"Content-Type": "application/json"},
+        )
+        with urllib.request.urlopen(req, timeout=120) as resp:
+            assert "result" in json.loads(resp.read())
+        url = f"http://127.0.0.1:{port}/metrics"
+        with urllib.request.urlopen(url, timeout=30) as resp:
+            text = resp.read().decode()
+    finally:
+        srv.shutdown()
+    assert 'rpc_requests_total{method="Write"}' in text
+    assert "writes_total" in text and "write_duration_seconds" in text
+    assert m.snapshot()["counters"]['rpc_requests_total{method="Write"}'] == 1
+
+
 def test_debug_timings_endpoint(rpc):
     """GET /debug/timings: the pprof-analogue profiling surface
     (frontend/profile.go mounts net/http/pprof on the serving mux) —

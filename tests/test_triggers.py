@@ -244,6 +244,25 @@ def test_fire_finds_every_window_in_one_aggregate(
     assert counts[3] == counts[1], counts
 
 
+def test_fire_reads_its_source_once(spark, sf_dir, tmp_path, monkeypatch):
+    """One fire reads the source bucket once for all its destinations,
+    so every rollup is recomputed from the same snapshot."""
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") == 1)
+    cat = Catalog(spark, os.path.join(str(tmp_path), "root"))
+    cat.write("SYM1/1Min/TICK", ev)
+    monkeypatch.setattr(Catalog, "_replace_where", lambda self, key, drop, new=None: None)
+    reads = []
+    real = Catalog.read
+
+    def counting(self, key, *a, **kw):
+        reads.append(key)
+        return real(self, key, *a, **kw)
+
+    monkeypatch.setattr(Catalog, "read", counting)
+    OnDiskAggTrigger(cat, ["5Min", "1H", "1D"]).fire("SYM1/1Min/TICK", ev)
+    assert reads.count("SYM1/1Min/TICK") == 1, reads
+
+
 def test_reader_never_sees_a_touched_rollup_bucket_missing(spark, tmp_path):
     """A thread polls the 1Min rollup while overlapping writes stream
     into the tick bucket: every minute a poll has seen stays visible

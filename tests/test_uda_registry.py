@@ -174,3 +174,17 @@ def test_run_query_chain_keys_by_symbol_column(spark, sf_dir):
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
     twap = run_query(ev, QueryParams(functions=["twap('1D')"]))
     assert {r["symbol"] for r in twap.collect()} == {1, 2, 3}
+
+
+def test_run_query_on_one_bucket_is_the_client_planner(cli):
+    """With symbol_col=None, run_query plans one bucket as Client.query
+    does: no symbol filter, adjust() finds the CA bucket through the
+    catalog it is given, and the unlimited result is in ts order."""
+    cat = cli.catalog
+    p = QueryParams(
+        symbols=["AAPL"], symbol_col=None, functions=["adjust('split,dividend')"]
+    )
+    got = run_query(cat.read("AAPL/1D/TICK"), p, cat)
+    want = _chain(cli, "AAPL/1D/TICK", "adjust('split,dividend')")
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+    assert [r["ts"].day for r in got.collect()] == [5, 15]
