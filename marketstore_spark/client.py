@@ -15,7 +15,9 @@ Scale: one query = one plan per requested key, built by
 plans/query.run_query — time predicates and projections push into the
 Parquet scan; directional limits on a single bucket compile to
 TakeOrderedAndProject (top-K, no global sort).  ``.df()`` is the only
-collect point, sized by the user's own limit/range.
+collect point, sized by the user's own limit/range, and orders the rows
+by their time column (the reference's Epoch order); ``.dataframe()`` is
+the plan itself, unordered — a bucket scans in file order.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from marketstore_spark.catalog import Catalog
-from marketstore_spark.plans.query import QueryParams, run_query
+from marketstore_spark.plans.query import QueryParams, run_query, time_column
 from marketstore_spark.plans.sqlfront import MarketSQL
 
 
@@ -57,13 +59,17 @@ class DataSet:
     """One key's result (pymarketstore DataSet): lazy DataFrame in,
     pandas out."""
 
-    def __init__(self, key: str, df: DataFrame):
+    def __init__(self, key: str, df: DataFrame, ts_col: str = "ts"):
         self.key = key
         self.symbol = key.split("/")[0]
         self._df = df
+        self._ts_col = ts_col
 
     def df(self) -> pd.DataFrame:
-        return self._df.toPandas()
+        """The rows, stably sorted by their ``time_column`` (plans/query)."""
+        pdf = self._df.toPandas()
+        ts = time_column(pdf.columns, self._ts_col)
+        return pdf if ts is None else pdf.sort_values(ts, kind="stable", ignore_index=True)
 
     def arrays(self) -> dict[str, "np.ndarray"]:
         """Column-major numpy arrays — the reference's npy wire format
@@ -76,7 +82,7 @@ class DataSet:
         return {c: pdf[c].to_numpy() for c in pdf.columns}
 
     def dataframe(self) -> DataFrame:
-        """Spark-native escape hatch (no collect)."""
+        """Spark-native escape hatch (no collect, no order)."""
         return self._df
 
 
@@ -121,7 +127,7 @@ class Client:
                 ts_col=self.ts_col,
             )
             df = run_query(self.catalog.read(key), qp, self.catalog)
-            out.append(DataSet(key, df))
+            out.append(DataSet(key, df, self.ts_col))
         return QueryReply(out)
 
     # -- write path (frontend/write.go) -----------------------------------

@@ -19,14 +19,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def as_instant(c: Column) -> Column:
-    """Cast to the instant TIMESTAMP type; no-op when already instant."""
-    return c.cast("timestamp")
-
-
 def epoch_us(c: Column) -> Column:
-    """Epoch microseconds of a TIMESTAMP or TIMESTAMP_NTZ column."""
-    return F.unix_micros(as_instant(c))
+    """Epoch microseconds of a TIMESTAMP or TIMESTAMP_NTZ column (cast to
+    the instant type first; a no-op cast when already instant)."""
+    return F.unix_micros(c.cast("timestamp"))
 
 
 def with_instant_ts(df, ts_col: str):
@@ -65,21 +61,22 @@ _PACK_US_OFF = "2305843009213693952"  # 2^61
 _PACK_TB_OFF = "9223372036854775808"  # 2^63
 
 
-def _dec38(literal: str) -> Column:
-    return F.expr(f"CAST('{literal}' AS DECIMAL(38,0))")
+def _dec38(sql: str) -> str:
+    return f"CAST({sql} AS DECIMAL(38,0))"
 
 
-def ord_key_us(us: Column, tb: Column) -> Column:
-    """DECIMAL(38,0) ordering key equivalent to lexicographic
-    (us, tb) for long epoch-µs ``us`` and long tiebreak ``tb``."""
-    return (
-        (us.cast("decimal(38,0)") + _dec38(_PACK_US_OFF)) * _dec38(_PACK_STRIDE)
-        + (tb.cast("decimal(38,0)") + _dec38(_PACK_TB_OFF))
-    ).cast("decimal(38,0)")
+def ord_key_us(us: str, tb: str) -> str:
+    """SQL text of the DECIMAL(38,0) ordering key equivalent to
+    lexicographic (us, tb) for the long epoch-µs expression ``us`` and
+    the long tiebreak expression ``tb``."""
+    off_us, stride, off_tb = (
+        _dec38(f"'{x}'") for x in (_PACK_US_OFF, _PACK_STRIDE, _PACK_TB_OFF)
+    )
+    return _dec38(f"({_dec38(us)} + {off_us}) * {stride} + ({_dec38(tb)} + {off_tb})")
 
 
-def ord_key_ts(ts: Column, tb: Column) -> Column:
-    """:func:`ord_key_us` over a TIMESTAMP/TIMESTAMP_NTZ column —
+def ord_key_ts(ts: str, tb: str) -> str:
+    """:func:`ord_key_us` over a TIMESTAMP/TIMESTAMP_NTZ expression —
     ``epoch_us`` is exact and monotone, so ordering by the packed key
-    equals ordering by (ts, tb)."""
-    return ord_key_us(epoch_us(ts), tb)
+    equals ordering by (ts, tb).  Column callers wrap it in ``F.expr``."""
+    return ord_key_us(f"unix_micros(CAST({ts} AS TIMESTAMP))", tb)

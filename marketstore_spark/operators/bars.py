@@ -95,7 +95,7 @@ def event_bars(
     staged = ticks.withColumn("__cum", cum_before).withColumn(
         "bar_id", F.expr(f"__cum DIV {int(threshold)}")
     )
-    okey = ord_key_ts(F.col("__ts"), F.col("__tb"))
+    okey = F.expr(ord_key_ts("__ts", "__tb"))
     vol = F.sum("vol")
     pv_c = F.sum(F.col("px_c") * F.col("vol"))
     return (
@@ -149,7 +149,7 @@ def heikin_ashi(
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     ticks = _cent_ticks(df, timeframe, symbol_col, ts_col, value_col, tiebreak_col)
-    okey = ord_key_ts(F.col("__ts"), F.col("__tb"))
+    okey = F.expr(ord_key_ts("__ts", "__tb"))
     candles = ticks.groupBy("symbol", "bucket").agg(
         F.min_by("px_c", okey).alias("o"),
         F.max("px_c").alias("h"),

@@ -9,12 +9,13 @@ Reference:
   Close, Sum::/Avg:: for volume-like columns).
 - Timeframes: utils/timeframe — 1Min/5Min/15Min/1H/1D etc.
 
-Spark design: one `groupBy(keys, window(ts, tf))` aggregation; first/
-last are `min_by`/`max_by` on a (ts, tiebreak) struct so results are
-deterministic under parallel execution.  This is a single shuffle on
-(key, bucket) with map-side partial aggregation — the same plan shape
-Catalyst picks for any hash aggregate, so it scales linearly and AQE
-coalesces small buckets.  No windows-over-sort, no per-key collect.
+Spark design: one `GROUP BY keys, window(ts, tf)` aggregation, built
+as one SQL statement (a few py4j sends, not hundreds of Column calls);
+first/last are `min_by`/`max_by` on a packed (ts, tiebreak) key so
+results are deterministic under parallel execution.  This is a single
+shuffle on (key, bucket) with map-side partial aggregation — the same
+plan shape Catalyst picks for any hash aggregate, so it scales linearly
+and AQE coalesces small buckets.  No windows-over-sort, no per-key collect.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from marketstore_spark.functions.sqltext import ident, literal
 from marketstore_spark.functions.timeutil import ord_key_ts
 
 # marketstore-style timeframe -> Spark window duration
@@ -59,40 +61,35 @@ def timeframe_to_duration(tf: str) -> str:
     )
 
 
-def _bucket(ts_col: str | Column, tf: str, tz: str | None = None) -> Column:
-    """Time bucket; with ``tz`` the bucket boundaries align to that
-    timezone's midnight (utils/timeframe + contrib/calendar: the
-    reference anchors 1D bars to the market's day, not UTC's).
+def _bucket(ts_col: str, tf: str, tz: str | None = None) -> str:
+    """SQL text of the time bucket of column ``ts_col``; with ``tz`` the
+    bucket boundaries align to that timezone's midnight
+    (utils/timeframe + contrib/calendar: the reference anchors 1D bars
+    to the market's day, not UTC's).
 
     Weekly buckets are Monday-aligned like the reference (Go's
     ``time.Truncate`` counts from the zero time, a Monday; Spark's
-    window origin 1970-01-01 is a Thursday, hence the 4-day
-    ``startTime`` shift).  ``1Mo``/``1Y`` truncate on the calendar.
-    Every timeframe yields a ``(start, end)`` struct, the bucket being
-    ``[start, end)``; a calendar bucket ends one month or year after
-    its start."""
-    ts = F.col(ts_col) if isinstance(ts_col, str) else ts_col
-    base = ts if tz is None else F.from_utc_timestamp(ts.cast("timestamp"), tz)
+    window origin 1970-01-01 is a Thursday, hence the 4-day start
+    shift).  ``1Mo``/``1Y`` truncate on the calendar.  Every timeframe
+    yields a ``(start, end)`` struct, the bucket being ``[start, end)``;
+    a calendar bucket ends one month or year after its start."""
+    ts = ident(ts_col)
+    if tz is not None:
+        ts = f"from_utc_timestamp(CAST({ts} AS TIMESTAMP), {literal(tz)})"
     if tf in _CALENDAR:
-        unit = _CALENDAR[tf]
-        start = F.date_trunc(unit, base)
-        return F.struct(
-            start.alias("start"), (start + F.expr(f"INTERVAL 1 {unit}")).alias("end")
+        start = f"date_trunc('{_CALENDAR[tf]}', {ts})"
+        return (
+            f"struct({start} AS `start`, "
+            f"{start} + INTERVAL 1 {_CALENDAR[tf]} AS `end`)"
         )
     dur = timeframe_to_duration(tf)
     if dur == "7 days":
-        return F.window(base, dur, startTime="4 days")
-    return F.window(base, dur)
+        return f"window({ts}, '7 days', '7 days', '4 days')"
+    return f"window({ts}, '{dur}')"
 
 
-def bucket_epoch(w: Column, tz: str | None = None) -> Column:
-    """Bucket start converted back to the storage timeline (UTC)."""
-    start = w["start"]
-    return F.to_utc_timestamp(start, tz) if tz else start
-
-
-def _ordkey(ts_col: str, tiebreak: Sequence[str]) -> Column:
-    """Argmin/argmax ordering key over (ts, *tiebreak).
+def _ordkey(ts_col: str, tiebreak: Sequence[str]) -> str:
+    """SQL text of the argmin/argmax ordering key over (ts, *tiebreak).
 
     The single-tiebreak form (every engine call site: tiebreak is the
     long event-id column) packs into ONE DECIMAL(38,0) via
@@ -104,8 +101,39 @@ def _ordkey(ts_col: str, tiebreak: Sequence[str]) -> Column:
     (and its sort) — ordering semantics are identical either way.
     """
     if len(tiebreak) == 1:
-        return ord_key_ts(F.col(ts_col), F.col(tiebreak[0]))
-    return F.struct(F.col(ts_col), *[F.col(c) for c in tiebreak])
+        return ord_key_ts(ident(ts_col), ident(tiebreak[0]))
+    return f"struct({', '.join(map(ident, [ts_col, *tiebreak]))})"
+
+
+def _candles(
+    df: DataFrame, timeframe: str, key_cols: Sequence[str], ts_col: str,
+    ohlc: Sequence[str], ok: str, sum_cols: Sequence[str] = (),
+    avg_cols: Sequence[str] = (), tz: str | None = None, count: bool = False,
+) -> DataFrame:
+    """One statement grouping by (key_cols, bucket): open/close are the
+    ``ohlc`` columns' values at the least/greatest ordering key ``ok``,
+    then the tagged sums and means and the row count ``n``.  Output:
+    key_cols, epoch (bucket start on the UTC timeline), aggregates."""
+    o, h, l, c = map(ident, ohlc)
+    aggs = {
+        "open": f"min_by({o}, {ok})",
+        "high": f"max({h})",
+        "low": f"min({l})",
+        "close": f"max_by({c}, {ok})",
+        **{f"{x}_sum": f"sum({ident(x)})" for x in sum_cols},
+        **{f"{x}_avg": f"avg({ident(x)})" for x in avg_cols},
+        **({"n": "count(1)"} if count else {}),
+    }
+    keys = [ident(k) for k in key_cols]
+    inner = [*keys, f"{_bucket(ts_col, timeframe, tz)} AS __w"]
+    inner += [f"{e} AS {ident(n)}" for n, e in aggs.items()]
+    epoch = "__w.start" if tz is None else f"to_utc_timestamp(__w.start, {literal(tz)})"
+    outer = [*keys, f"{epoch} AS epoch", *map(ident, aggs)]
+    return df.sparkSession.sql(
+        f"SELECT {', '.join(outer)} FROM (SELECT {', '.join(inner)} "
+        f"FROM {{df}} GROUP BY {', '.join([*keys, '__w'])})",
+        df=df,
+    )
 
 
 def tick_candles(
@@ -128,27 +156,10 @@ def tick_candles(
     start at that market's midnight); epoch stays on the UTC timeline.
     """
     ok = _ordkey(ts_col, tiebreak)
-    aggs = [
-        F.min_by(price_col, ok).alias("open"),
-        F.max(price_col).alias("high"),
-        F.min(price_col).alias("low"),
-        F.max_by(price_col, ok).alias("close"),
-    ]
-    aggs += [F.sum(c).alias(f"{c}_sum") for c in sum_cols]
-    aggs += [F.avg(c).alias(f"{c}_avg") for c in avg_cols]
-    if include_count:
-        aggs.append(F.count(F.lit(1)).alias("n"))
-    out = (
-        df.groupBy(*key_cols, _bucket(ts_col, timeframe, tz).alias("__w"))
-        .agg(*aggs)
-        .withColumn("epoch", bucket_epoch(F.col("__w"), tz))
-        .drop("__w")
+    return _candles(
+        df, timeframe, key_cols, ts_col, [price_col] * 4, ok, sum_cols, avg_cols,
+        tz, include_count,
     )
-    cols = list(key_cols) + ["epoch", "open", "high", "low", "close"]
-    cols += [f"{c}_sum" for c in sum_cols] + [f"{c}_avg" for c in avg_cols]
-    if include_count:
-        cols.append("n")
-    return out.select(*cols)
 
 
 def candle_candles(
@@ -167,25 +178,7 @@ def candle_candles(
     itself is a unique order key within the coarse bucket — no tiebreak
     column needed.
     """
-    o, h, l, c = ohlc
-    ok = F.col(ts_col)
-    aggs = [
-        F.min_by(o, ok).alias("open"),
-        F.max(h).alias("high"),
-        F.min(l).alias("low"),
-        F.max_by(c, ok).alias("close"),
-    ]
-    aggs += [F.sum(x).alias(f"{x}_sum") for x in sum_cols]
-    aggs += [F.avg(x).alias(f"{x}_avg") for x in avg_cols]
-    out = (
-        df.groupBy(*key_cols, _bucket(ts_col, timeframe).alias("__w"))
-        .agg(*aggs)
-        .withColumn("epoch", F.col("__w.start"))
-        .drop("__w")
-    )
-    cols = list(key_cols) + ["epoch", "open", "high", "low", "close"]
-    cols += [f"{x}_sum" for x in sum_cols] + [f"{x}_avg" for x in avg_cols]
-    return out.select(*cols)
+    return _candles(df, timeframe, key_cols, ts_col, ohlc, ident(ts_col), sum_cols, avg_cols)
 
 
 def rollup_cascade(
@@ -235,7 +228,7 @@ def rollup_cascade(
         off = F.lit(origin_shift_s * 1_000_000).cast("long")
         return F.timestamp_micros(F.floor((us - off) / w).cast("long") * w + off)
 
-    ok = _ordkey(ts_col, tiebreak)
+    ok = F.expr(_ordkey(ts_col, tiebreak))
     c5 = (
         df.groupBy(*keys, fixed(epoch_us(F.col(ts_col)), 300).alias("__b5"))
         .agg(

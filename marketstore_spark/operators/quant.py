@@ -140,7 +140,7 @@ def pairwise_corr(
     # map-side-combinable close pick (the _bucket_closes re-plan): the
     # exchange carries partial candles, not every tick
     closes = base.groupBy("symbol", "bucket").agg(
-        F.max_by("cents", ord_key_ts(F.col("__ts"), F.col("__tb"))).alias("cents")
+        F.max_by("cents", F.expr(ord_key_ts("__ts", "__tb"))).alias("cents")
     )
 
     spark = df.sparkSession
@@ -554,7 +554,7 @@ def _bucket_closes(
         df, timeframe, symbol_col, ts_col, value_col, tiebreak_col
     )
     return ticks.groupBy("symbol", "bucket").agg(
-        F.max_by("px_c", ord_key_ts(F.col("__ts"), F.col("__tb"))).alias("close_c")
+        F.max_by("px_c", F.expr(ord_key_ts("__ts", "__tb"))).alias("close_c")
     )
 
 
@@ -587,7 +587,7 @@ def atr(
     candles = ticks.groupBy("symbol", "bucket").agg(
         F.max("px_c").alias("h"),
         F.min("px_c").alias("l"),
-        F.max_by("px_c", ord_key_ts(F.col("__ts"), F.col("__tb"))).alias("c"),
+        F.max_by("px_c", F.expr(ord_key_ts("__ts", "__tb"))).alias("c"),
     )
     ws = Window.partitionBy("symbol").orderBy("bucket")
     prev_c = F.lag("c").over(ws)
@@ -833,7 +833,7 @@ def nbbo(
     # task; candler._ordkey rationale).  The venue-collapsed rollup
     # below keeps its struct min/max: its venue tiebreak is a string
     # (unpackable) and its input is dims × buckets, not ticks.
-    ok = ord_key_ts(F.col("__ts"), F.col("__tb"))
+    ok = F.expr(ord_key_ts("__ts", "__tb"))
     last_q = quotes.groupBy("symbol", "venue", "bucket").agg(
         F.max_by("bid_c", ok).alias("bid_c"),
         F.max_by("ask_c", ok).alias("ask_c"),
@@ -975,7 +975,7 @@ def amihud_illiquidity(
         extras=[F.col(volume_col).cast("long").alias("vol")],
     )
     daily = ticks.groupBy("symbol", "bucket").agg(
-        F.max_by("px_c", ord_key_ts(F.col("__ts"), F.col("__tb"))).alias("close_c"),
+        F.max_by("px_c", F.expr(ord_key_ts("__ts", "__tb"))).alias("close_c"),
         F.sum(F.col("px_c") * F.col("vol")).alias("dv_c"),
     )
     ws = Window.partitionBy("symbol").orderBy("bucket")
@@ -1029,7 +1029,7 @@ def ichimoku(
     hilo = ticks.groupBy("symbol", "bucket").agg(
         F.max("px_c").alias("h"),
         F.min("px_c").alias("l"),
-        F.max_by("px_c", ord_key_ts(F.col("__ts"), F.col("__tb"))).alias("c"),
+        F.max_by("px_c", F.expr(ord_key_ts("__ts", "__tb"))).alias("c"),
     )
     ws = Window.partitionBy("symbol").orderBy("bucket")
     rown = F.row_number().over(ws)
@@ -1537,7 +1537,7 @@ def kyle_lambda(
         "__side", F.coalesce(F.last(direction, ignorenulls=True).over(run), F.lit(0))
     )
     buckets = signed.groupBy("symbol", "bucket").agg(
-        F.max_by(F.col("px_c"), ord_key_ts(F.col("__ts"), F.col("__tb"))).alias("close_c"),
+        F.max_by(F.col("px_c"), F.expr(ord_key_ts("__ts", "__tb"))).alias("close_c"),
         F.sum(F.col("__side").cast("long") * F.col("__vol")).alias("sv"),
     )
     wb = Window.partitionBy("symbol").orderBy("bucket")
@@ -1787,7 +1787,7 @@ def _bucket_candles(
     min_by/max_by partials combine per map partition, so the exchange
     carries bars, not ticks)."""
     ticks = _cent_ticks(df, timeframe, symbol_col, ts_col, value_col, tiebreak_col)
-    okey = ord_key_ts(F.col("__ts"), F.col("__tb"))
+    okey = F.expr(ord_key_ts("__ts", "__tb"))
     return ticks.groupBy("symbol", "bucket").agg(
         F.min_by("px_c", okey).alias("o"),
         F.max("px_c").alias("h"),
@@ -2199,7 +2199,7 @@ def mfi(
         tiebreak_col,
         extras=(F.col(volume_col).cast("long").alias("__vol"),),
     )
-    okey = ord_key_ts(F.col("__ts"), F.col("__tb"))
+    okey = F.expr(ord_key_ts("__ts", "__tb"))
     candles = ticks.groupBy("symbol", "bucket").agg(
         F.max("px_c").alias("h"),
         F.min("px_c").alias("l"),
@@ -2293,7 +2293,7 @@ def cci(
     if n <= 0:
         raise ValueError("n must be positive")
     ticks = _cent_ticks(df, timeframe, symbol_col, ts_col, value_col, tiebreak_col)
-    okey = ord_key_ts(F.col("__ts"), F.col("__tb"))
+    okey = F.expr(ord_key_ts("__ts", "__tb"))
     candles = ticks.groupBy("symbol", "bucket").agg(
         F.max("px_c").alias("h"),
         F.min("px_c").alias("l"),
@@ -2432,7 +2432,7 @@ def adx(
     if n <= 0:
         raise ValueError("n must be positive")
     ticks = _cent_ticks(df, timeframe, symbol_col, ts_col, value_col, tiebreak_col)
-    okey = ord_key_ts(F.col("__ts"), F.col("__tb"))
+    okey = F.expr(ord_key_ts("__ts", "__tb"))
     candles = ticks.groupBy("symbol", "bucket").agg(
         F.max("px_c").alias("h"),
         F.min("px_c").alias("l"),

@@ -11,16 +11,18 @@ directional limit is per key via row_number over (key) — one shuffle by
 key, no global sort; with N symbols and last-k per symbol the state per
 partition is O(rows/partitions).  A keyless limit (one bucket, one
 series) is a bounded top-K instead, not a row_number window:
-``orderBy(...).limit(n)`` plans TakeOrderedAndProject (k rows per
-partition, merged on the driver).
+``ORDER BY ... LIMIT n`` plans TakeOrderedAndProject (k rows per
+partition, merged on the driver).  Both are built from SQL text
+(functions/sqltext), a few py4j sends each.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from marketstore_spark.functions.sqltext import ident, literal
 
 
 def time_range(
@@ -29,12 +31,11 @@ def time_range(
     start=None,
     end=None,
 ) -> DataFrame:
-    """Inclusive [start, end] slice on the time index (Epoch in reference)."""
-    if start is not None:
-        df = df.filter(F.col(ts_col) >= F.lit(start))
-    if end is not None:
-        df = df.filter(F.col(ts_col) <= F.lit(end))
-    return df
+    """Inclusive [start, end] slice on the time index (Epoch in
+    reference) as one predicate; datetime bounds floor to µs."""
+    ops = ((">=", start), ("<=", end))
+    bounds = [f"{ident(ts_col)} {op} {literal(v)}" for op, v in ops if v is not None]
+    return df.filter(" AND ".join(bounds)) if bounds else df
 
 
 def limit_records(
@@ -50,18 +51,22 @@ def limit_records(
     (frontend/query.go:39-42); ties broken deterministically by the
     trailing order columns.  With no ``key_cols`` the frame is one
     series: the rows come back ascending in the order columns, a tail
-    re-sorted after its top-K.
+    re-sorted after its top-K (a sort of the k rows, no extra job).
     """
-    ordering = [F.col(c).asc() if from_start else F.col(c).desc() for c in order_cols]
+    way = "" if from_start else " DESC"
+    order = ", ".join(ident(c) + way for c in order_cols)
     if not key_cols:
-        df = df.orderBy(*ordering).limit(n)
-        return df if from_start else df.orderBy(*[F.col(c).asc() for c in order_cols])
-    w = Window.partitionBy(*key_cols).orderBy(*ordering)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n)
-        .drop("__rn")
-    )
+        text = f"SELECT * FROM {{df}} ORDER BY {order} LIMIT {int(n)}"
+        if not from_start:
+            asc = ", ".join(map(ident, order_cols))
+            text = f"SELECT * FROM ({text}) ORDER BY {asc}"
+        return df.sparkSession.sql(text, df=df)
+    keys = ", ".join(map(ident, key_cols))
+    return df.sparkSession.sql(
+        f"SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY {keys} "
+        f"ORDER BY {order}) AS __rn FROM {{df}}) WHERE __rn <= {int(n)}",
+        df=df,
+    ).drop("__rn")
 
 
 def project_columns(df: DataFrame, columns: Sequence[str] | None) -> DataFrame:

@@ -19,7 +19,11 @@ Parquet scan.  A limit is a per-symbol row_number window on a keyed
 frame and a bounded top-K (TakeOrderedAndProject) on one bucket
 (operators/slice.limit_records).  The function chain is a fold over
 registered DataFrame→DataFrame operators, mirroring AggRunner.Run's
-chain-the-output-into-the-next-input loop (registry.go:52-64).
+chain-the-output-into-the-next-input loop (registry.go:52-64).  The
+plan has no final sort: a wire result lands whole on the driver, where
+``DataSet.df()`` (client.py) orders the rows by the time column; a
+Spark global sort in front of that collect would cost a sampling job
+and a shuffle.  ``DataSet.dataframe()`` is the unordered plan.
 """
 
 from __future__ import annotations
@@ -59,6 +63,17 @@ class QueryParams:
     tiebreak: Sequence[str] = ("event_id",)
 
 
+def time_column(columns, first: str = "ts", required: bool = False) -> str | None:
+    """The time column among ``columns``: ``first``, then ``ts``,
+    ``Epoch``, ``epoch`` (tick buckets keep their time in ``ts``; rollups
+    and candles in ``epoch``).  None when there is none, unless
+    ``required``."""
+    ts = next((c for c in (first, "ts", "Epoch", "epoch") if c in columns), None)
+    if ts is None and required:
+        raise ValueError(f"no timestamp column among {list(columns)}")
+    return ts
+
+
 # -- one call's scope ------------------------------------------------------
 
 
@@ -76,10 +91,7 @@ class _Call:
 
     @cached_property
     def ts(self) -> str:
-        for c in (self.p.ts_col, "ts", "Epoch", "epoch"):
-            if c in self.columns:
-                return c
-        raise ValueError(f"no timestamp column among {self.columns}")
+        return time_column(self.columns, self.p.ts_col, required=True)
 
     @cached_property
     def tiebreak(self) -> list[str]:
@@ -530,23 +542,22 @@ def apply_functions(df: DataFrame, params: QueryParams, catalog=None) -> DataFra
 
 def run_query(df: DataFrame, params: QueryParams, catalog=None) -> DataFrame:
     """Compile a QueryRequest to a single DataFrame plan; ``catalog``
-    supplies the CA bucket to adjust().  A limit orders by ts, then the
+    supplies the CA bucket to adjust().  The range and the limit run on
+    the frame's :func:`time_column`; a limit orders by it, then the
     tiebreak columns the frame has, else every other column."""
-    ts, keys = params.ts_col, [params.symbol_col] if params.symbol_col else []
+    keys = [params.symbol_col] if params.symbol_col else []
     if params.symbols and keys:
         df = df.filter(F.col(params.symbol_col).isin(list(params.symbols)))
-    df = slice_ops.time_range(df, ts, params.epoch_start, params.epoch_end)
-    if params.limit_record_count is not None:
+    limit = params.limit_record_count
+    if (params.epoch_start, params.epoch_end, limit) != (None, None, None):
         cols = df.columns
-        tb = [c for c in params.tiebreak if c in cols] or [c for c in cols if c != ts]
-        df = slice_ops.limit_records(
-            df, params.limit_record_count, key_cols=keys, order_cols=[ts, *tb],
-            from_start=params.limit_from_start,
-        )
+        ts = time_column(cols, params.ts_col, required=True)
+        df = slice_ops.time_range(df, ts, params.epoch_start, params.epoch_end)
+        if limit is not None:
+            tb = [c for c in params.tiebreak if c in cols] or [c for c in cols if c != ts]
+            df = slice_ops.limit_records(
+                df, limit, key_cols=keys, order_cols=[ts, *tb],
+                from_start=params.limit_from_start,
+            )
     df = slice_ops.project_columns(df, params.columns)
-    df = apply_functions(df, params, catalog)
-    if not keys and params.limit_record_count is None and ts in df.columns:
-        # the reference's storage is time-indexed, so Query returns
-        # Epoch order (executor/reader.go); a bucket scans in file order
-        df = df.orderBy(F.col(ts).asc())
-    return df
+    return apply_functions(df, params, catalog)

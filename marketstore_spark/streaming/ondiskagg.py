@@ -22,22 +22,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from marketstore_spark.functions.timeutil import with_instant_ts
-from marketstore_spark.operators.candler import _CALENDAR, _bucket, _ordkey
+from marketstore_spark.operators.candler import _CALENDAR, _bucket, tick_candles
 
 
-def _stream_bucket(ts_col: str, timeframe: str):
-    """The SAME bucket expression the batch candler aggregates with —
-    so a 1W stream is Monday-aligned like its batch backfill (plain
-    F.window weeks start Thursday).  Calendar-variable timeframes
-    (1Mo/1Y) are rejected: they are not fixed windows, so streaming
-    state could not be watermark-evicted — roll those up from the 1D
-    stream in batch."""
+def _fixed_only(timeframe: str) -> None:
+    """Streams bucket with the batch candler's ``_bucket`` — so a 1W
+    stream is Monday-aligned like its batch backfill (plain F.window
+    weeks start Thursday).  Calendar-variable timeframes (1Mo/1Y) are
+    rejected: they are not fixed windows, so streaming state could not
+    be watermark-evicted — roll those up from the 1D stream in batch."""
     if timeframe in _CALENDAR:
         raise ValueError(
             f"{timeframe!r} is calendar-variable; streaming rollups support "
             "fixed windows only — derive it in batch from the 1D bucket"
         )
-    return _bucket(ts_col, timeframe)
 
 
 def stream_candles(
@@ -49,38 +47,18 @@ def stream_candles(
     watermark: str = "10 minutes",
     tiebreak: Sequence[str] = ("event_id",),
 ) -> DataFrame:
-    """Streaming OHLCV candles per key per bucket.
-
-    Same aggregate shape as operators.candler.tick_candles (min_by/
-    max_by on the packed (ts, tiebreak) ordering key, exact
-    min/max/count/sum) so batch backfill and streaming maintenance
-    produce identical rows — and the streaming state row stays
-    primitive-typed (candler._ordkey's HashAggregate rationale).
+    """Streaming OHLCV candles per key per bucket: the batch
+    operators.candler.tick_candles statement over the watermarked
+    stream, so batch backfill and streaming maintenance produce
+    identical rows — and the streaming state row stays primitive-typed
+    (candler._ordkey's HashAggregate rationale).
     """
-    stream = with_instant_ts(stream, ts_col)  # watermark needs instant ts
-    ok = _ordkey(ts_col, tiebreak)
-    agg = (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols, _stream_bucket(ts_col, timeframe).alias("__w"))
-        .agg(
-            F.min_by(price_col, ok).alias("open"),
-            F.max(price_col).alias("high"),
-            F.min(price_col).alias("low"),
-            F.max_by(price_col, ok).alias("close"),
-            F.sum(price_col).alias("value_sum"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    return agg.select(
-        *key_cols,
-        F.col("__w.start").alias("epoch"),
-        "open",
-        "high",
-        "low",
-        "close",
-        "value_sum",
-        "n",
-    )
+    _fixed_only(timeframe)
+    stream = with_instant_ts(stream, ts_col).withWatermark(ts_col, watermark)
+    return tick_candles(
+        stream, timeframe, key_cols, ts_col, price_col, sum_cols=[price_col],
+        tiebreak=tiebreak, include_count=True,
+    ).withColumnRenamed(f"{price_col}_sum", "value_sum")
 
 
 def stream_vwap(
@@ -98,11 +76,12 @@ def stream_vwap(
     weight 1) — marketstore's tick stream has no volume either.  Same
     windowed-agg state shape as stream_candles: O(keys × open windows),
     watermark-expired."""
+    _fixed_only(timeframe)
     stream = with_instant_ts(stream, ts_col)  # watermark needs instant ts
     w = F.lit(1.0) if volume_col is None else F.col(volume_col)
     agg = (
         stream.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols, _stream_bucket(ts_col, timeframe).alias("__w"))
+        .groupBy(*key_cols, F.expr(_bucket(ts_col, timeframe)).alias("__w"))
         .agg(
             (F.sum(F.col(price_col) * w) / F.sum(w)).alias("vwap"),
             F.count(F.lit(1)).alias("n"),
@@ -121,9 +100,9 @@ def stream_range_vol(
     tiebreak: Sequence[str] = ("event_id",),
 ) -> DataFrame:
     """Live Parkinson / Garman–Klass / Rogers–Satchell variance
-    estimators per (key, bucket): the ondiskagg candle aggregate on
-    INTEGER CENTS (the batch ``_cent_ticks`` cast) followed by the
-    batch operator's shared per-row estimator chain
+    estimators per (key, bucket): the batch candle aggregate
+    (tick_candles) on INTEGER CENTS (the batch ``_cent_ticks`` cast)
+    followed by the batch operator's shared per-row estimator chain
     (operators/quant.range_vol_estimators) — so a closed bucket's row
     is bitwise the batch ``range_vol`` row over the same ticks
     (pinned in tests).
@@ -137,35 +116,13 @@ def stream_range_vol(
         range_vol_log_cols,
     )
 
-    stream = with_instant_ts(stream, ts_col)
+    _fixed_only(timeframe)
     cents = (F.col(price_col).cast("decimal(8,2)") * 100).cast("long")
-    staged = stream.withColumn("__px_c", cents)
-    ok = _ordkey(ts_col, tiebreak)
-    agg = (
-        staged.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols, _stream_bucket(ts_col, timeframe).alias("__w"))
-        .agg(
-            F.min_by("__px_c", ok).alias("o"),
-            F.max("__px_c").alias("h"),
-            F.min("__px_c").alias("l"),
-            F.max_by("__px_c", ok).alias("c"),
-        )
-    )
-    staged_cols = agg.select(
-        *key_cols,
-        F.col("__w.start").alias("epoch"),
-        "o",
-        "h",
-        "l",
-        "c",
-        *range_vol_log_cols(),
-    )
-    return staged_cols.select(
-        *key_cols,
-        "epoch",
-        "o",
-        "h",
-        "l",
-        "c",
-        *range_vol_estimators(),
+    staged = with_instant_ts(stream, ts_col).withColumn("__px_c", cents)
+    ohlc = tick_candles(
+        staged.withWatermark(ts_col, watermark), timeframe, key_cols, ts_col,
+        "__px_c", tiebreak=tiebreak,
+    ).toDF(*key_cols, "epoch", "o", "h", "l", "c")
+    return ohlc.select("*", *range_vol_log_cols()).select(
+        *key_cols, "epoch", "o", "h", "l", "c", *range_vol_estimators()
     )

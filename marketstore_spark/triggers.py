@@ -92,7 +92,7 @@ class OnDiskAggTrigger:
         # one select per destination: Spark allows one window() per projection
         buckets = written.select(self.ts_col)
         for i, dest_tf in enumerate(self.destinations):
-            buckets = buckets.select("*", _bucket(self.ts_col, dest_tf).alias(f"w{i}"))
+            buckets = buckets.selectExpr("*", f"{_bucket(self.ts_col, dest_tf)} AS w{i}")
         bounds = buckets.agg(
             *[
                 agg(f"w{i}.{edge}")

@@ -496,3 +496,59 @@ def test_write_floors_ns_stamps_to_us_on_the_arrow_path(spark, tmp_path):
     got = cat.read("NS/1Sec/TICK").select(F.unix_micros("ts").alias("us"), "value")
     stored = {r["value"]: r["us"] for r in got.collect()}
     assert stored == {float(i): ns // 1000 for i, ns in enumerate(stamps)}
+
+
+@pytest.fixture(scope="module")
+def rollup_rpc(spark, tmp_path_factory):
+    """A msgpack client of a server over a tick bucket whose ondiskagg
+    trigger keeps a 1Min rollup.  Its second day has four times the
+    ticks, so that day's rollup file is the larger one, which a scan
+    that packs files by size reads first."""
+    import datetime as dt
+
+    from marketstore_spark.client import HttpClient
+    from marketstore_spark.triggers import OnDiskAggTrigger, TriggerRegistry
+
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("rolluproot")))
+    reg = TriggerRegistry()
+    reg.register("*/1Sec/TICK", OnDiskAggTrigger(cat, ["1Min"]))
+    cat.triggers = reg
+    for day, n in ((2, 600), (3, 2400)):
+        t0, step = dt.datetime(2024, 1, day), 86400 // n
+        rows = [
+            (day * 10**6 + i, t0 + dt.timedelta(seconds=i * step), 100.0 + i % 17)
+            for i in range(n)
+        ]
+        cat.write(
+            "AAPL/1Sec/TICK",
+            spark.createDataFrame(rows, "event_id long, ts timestamp, value double"),
+        )
+    srv, _t = serve_background(cat)
+    yield HttpClient(f"http://127.0.0.1:{srv.server_address[1]}", codec="msgpack")
+    srv.shutdown()
+
+
+def test_rollup_range_and_limit_run_on_epoch(rollup_rpc):
+    """A rollup keeps its time in ``epoch``: a range and a limit on it
+    resolve that column, and the rows come back in epoch order."""
+    import pandas as pd
+
+    key, minute = "AAPL/1Min/TICK", 60 * 10**9
+    lo = pd.Timestamp("2024-01-03 10:00").value
+    got = rollup_rpc.query(key, epoch_start=lo, epoch_end=lo + 60 * minute - 1)[key]
+    assert got["epoch"] == [lo + i * minute for i in range(60)]
+    last = pd.Timestamp("2024-01-03 23:59").value
+    got = rollup_rpc.query(key, limit_record_count=7)[key]
+    assert got["epoch"] == [last - i * minute for i in range(6, -1, -1)]
+
+
+def test_wire_candles_come_back_in_epoch_order(rollup_rpc):
+    """tickcandler and candlecandler through an RPC Query return their
+    candles in ascending epoch order."""
+    cases = (
+        ("AAPL/1Sec/TICK", "tickcandler('5Min',value)", 2 * 288),
+        ("AAPL/1Min/TICK", "candlecandler('1H',open,high,low,close)", 2 * 24),
+    )
+    for key, call, n in cases:
+        epochs = rollup_rpc.query(key, functions=[call])[key]["epoch"]
+        assert len(epochs) == n and epochs == sorted(set(epochs)), call

@@ -188,7 +188,7 @@ def test_rollup_commit_fires_destination_triggers(spark, sf_dir, tmp_path):
 
 
 def test_bucket_ends_for_every_timeframe(spark):
-    """``_bucket`` gives every timeframe a ``[start, end)`` struct: a
+    """``_bucket``'s SQL text gives every timeframe a ``[start, end)`` struct: a
     pre-1970 stamp and a leap day land in the right fixed, Monday
     weekly, calendar month and calendar year buckets."""
     import datetime as dt
@@ -217,7 +217,7 @@ def test_bucket_ends_for_every_timeframe(spark):
     for tf in ("1Min", "1D", "1W", "1Mo", "1Y"):
         got = {
             r["ts"]: (r["w"]["start"], r["w"]["end"])
-            for r in df.select("ts", _bucket("ts", tf).alias("w")).collect()
+            for r in df.selectExpr("ts", f"{_bucket('ts', tf)} AS w").collect()
         }
         assert got == {ts: want[tf] for ts, want in cases.items()}, tf
 

@@ -178,8 +178,9 @@ def test_run_query_chain_keys_by_symbol_column(spark, sf_dir):
 
 def test_run_query_on_one_bucket_is_the_client_planner(cli):
     """With symbol_col=None, run_query plans one bucket as Client.query
-    does: no symbol filter, adjust() finds the CA bucket through the
-    catalog it is given, and the unlimited result is in ts order."""
+    does: no symbol filter, and adjust() finds the CA bucket through the
+    catalog it is given.  The rows come back in ts order from
+    ``.df()``, where the order contract lives."""
     cat = cli.catalog
     p = QueryParams(
         symbols=["AAPL"], symbol_col=None, functions=["adjust('split,dividend')"]
@@ -187,4 +188,7 @@ def test_run_query_on_one_bucket_is_the_client_planner(cli):
     got = run_query(cat.read("AAPL/1D/TICK"), p, cat)
     want = _chain(cli, "AAPL/1D/TICK", "adjust('split,dividend')")
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
-    assert [r["ts"].day for r in got.collect()] == [5, 15]
+    pdf = cli.query(
+        Params("AAPL", "1D", "TICK", functions=["adjust('split,dividend')"])
+    ).first().df()
+    assert [t.day for t in pdf["ts"]] == [5, 15]
